@@ -23,7 +23,7 @@ import os
 import pyspark.sql.functions as F
 from flask import Flask, Response, jsonify, request
 
-from . import formats, members, result
+from . import formats, members, plancache, result
 from .catalog import Catalog
 from .parser import ParseError, parse_segments
 from .planner import aggregate
@@ -345,9 +345,7 @@ def create_app(cat: Catalog, sf_dir: str, spark=None,
         if fmt == "xls":
             # binary BIFF8 in an OLE2 container — the same bytes-level
             # format the reference's spreadsheet gem emits
-            # (formatters/excel.rb:5-31); the SpreadsheetML textual
-            # variant stays available as formats.to_xls for clients
-            # that want XML
+            # (formatters/excel.rb:5-31)
             return Response(formats.to_xls_biff(header, tidy),
                             mimetype="application/vnd.ms-excel")
         if fmt == "xlsx":
@@ -951,8 +949,7 @@ def create_app(cat: Catalog, sf_dir: str, spark=None,
         if flush_secret is None or request.args.get("secret") != flush_secret:
             return jsonify({"error": "forbidden"}), 403
         get_spark().catalog.clearCache()
-        from .planner import clear_named_set_cache
-        clear_named_set_cache()
+        plancache.invalidate()
         with cache_lock:
             result_cache.clear()
             cache_stats["cells"] = 0

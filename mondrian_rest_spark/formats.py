@@ -1,4 +1,4 @@
-"""Output sinks: CSV / JSON-records / SpreadsheetML "xls".
+"""Output sinks: CSV / JSON-records / binary BIFF8 xls / OOXML xlsx.
 
 Analog of the reference formatters (formatters/csv.rb:5-22,
 jsonrecords.rb:5-33, excel.rb:5-31, aggregation_json.rb:3-10).
@@ -33,30 +33,6 @@ def to_jsonrecords(header: list[str], rows: list[list],
         return json.dumps({"variables": header, "data": rows}, default=str)
     return json.dumps(
         {"data": [dict(zip(header, r)) for r in rows]}, default=str)
-
-
-def to_xls(header: list[str], rows: list[list]) -> str:
-    """formatters/excel.rb:5-31 analog.  Emits SpreadsheetML 2003 —
-    plain XML Excel opens natively — so no spreadsheet library is
-    required in the runtime image."""
-    def cell(v: Any) -> str:
-        if v is None:
-            return '<Cell><Data ss:Type="String"></Data></Cell>'
-        if isinstance(v, bool):
-            return f'<Cell><Data ss:Type="Boolean">{int(v)}</Data></Cell>'
-        if isinstance(v, (int, float)):
-            return f'<Cell><Data ss:Type="Number">{v}</Data></Cell>'
-        return f'<Cell><Data ss:Type="String">{escape(str(v))}</Data></Cell>'
-
-    body = "".join(
-        "<Row>" + "".join(cell(v) for v in row) + "</Row>"
-        for row in [list(header)] + [list(r) for r in rows])
-    return (
-        '<?xml version="1.0"?>'
-        '<Workbook xmlns="urn:schemas-microsoft-com:office:spreadsheet" '
-        'xmlns:ss="urn:schemas-microsoft-com:office:spreadsheet">'
-        '<Worksheet ss:Name="aggregation"><Table>' + body +
-        "</Table></Worksheet></Workbook>")
 
 
 def to_xls_biff(header: list[str], rows: list[list]) -> bytes:

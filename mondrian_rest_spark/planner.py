@@ -57,8 +57,9 @@ from .parser import (
     parse_property,
     parse_segments,
 )
+from . import plancache
 from .query import QueryModel
-from .sources.registry import load_table
+from .sources.registry import _scan_layout, load_table, table_file
 
 # dense-axis (nonempty=false) cell-count ceiling — see _densify
 MAX_DENSE_CELLS = 10_000_000
@@ -249,23 +250,29 @@ def _cut_predicate(rc: ResolvedCut, schema=None):
     raise ParseError(f"unsupported cut kind {cut.kind!r}")
 
 
-#: member-existence lookups verified per (session, data dir, cube,
-#: dim, level): {(column alias, raw value string), ...}.  Members can
-#: only APPEAR under append-only ingest, so positives never go stale;
-#: /flush and rollup appends clear the cache anyway (with the named-
-#: set windows) for symmetry.
-_MEMBER_EXISTS: dict = {}
-
 #: full distinct member sets for DEGENERATE levels with no covering
-#: rollup (r14, VERDICT r13 #2): the first-touch validation of a
-#: degenerate cut value previously column-scanned the FACT per new
-#: value; now ONE bounded distinct pass per (level, column) caches the
-#: whole member set — every later value (hit or miss) validates
-#: driver-side.  Levels wider than the cap store None and fall back to
-#: the per-value IN-filter path (unbounded collect would be the real
-#: scale bug).  Cleared with the member cache on /flush and appends.
-_DEGENERATE_MEMBERS: dict = {}
-_DEGENERATE_MEMBERS_CAP = 100_000
+#: rollup (r14, VERDICT r13 #2): ONE bounded distinct pass per (level,
+#: column) caches the whole member set, so every later value (hit or
+#: miss) validates driver-side.  Levels wider than the cap store None
+#: and fall back to the per-value IN-filter path (an unbounded collect
+#: would be the real scale bug).
+_DEGENERATE_MEMBER_CAP = 100_000
+
+
+def _dim_tables(dim: Dimension) -> list[str]:
+    """The tables a dimension's members are read from (none for a
+    degenerate dimension, whose members live on the fact)."""
+    pc = dim.parent_child
+    if pc is not None:
+        return ([s.table for s in pc.sources]
+                + ([pc.closure_table] if pc.closure_table else []))
+    return [t for t, _, _ in dim.tables]
+
+
+def _files(sf_dir: str, tables) -> list[str]:
+    """The files behind ``tables``: the plan-time cache stamp of a
+    memo computed from them."""
+    return [f for f in (table_file(sf_dir, t) for t in tables) if f]
 
 
 def _validate_cut_members(spark: SparkSession, sf_dir: str, cube: Cube,
@@ -294,9 +301,12 @@ def _validate_cut_members(spark: SparkSession, sf_dir: str, cube: Cube,
         use_key = ref.by_key or not (level.caption and level.caption_alias)
         col = level.key_alias if use_key else level.caption_alias
         by_col.setdefault(col, []).append(str(ref.value))
-    ck = (spark.sparkContext.applicationId, sf_dir, cube.name,
-          dim.name, level.name)
-    seen = _MEMBER_EXISTS.setdefault(ck, set())
+    # verified {(column alias, raw value string)} of this level, valid
+    # while the tables its members are read from are unchanged
+    ck = (sf_dir, cube.name, dim.name, level.name)
+    member_files = _files(sf_dir, [cube.fact] if dim.is_degenerate
+                          else _dim_tables(dim))
+    seen = plancache.get("member_exists", ck, member_files, set)
     for col, raws in by_col.items():
         unseen = sorted({r for r in raws if (col, r) not in seen})
         if not unseen:
@@ -322,21 +332,17 @@ def _validate_cut_members(spark: SparkSession, sf_dir: str, cube: Cube,
                         exprs[level.caption_alias] = level.caption
                     return load_table(spark, sf_dir, cube.fact).select(
                         *[F.expr(e).alias(a) for a, e in exprs.items()])
-                # bounded full-member memo (r14, VERDICT r13 #2): ONE
-                # distinct pass per (level, column) for the session
-                # instead of one fact column scan per first-touch
-                # VALUE; later values validate driver-side
-                dk = (ck, col)
-                if dk not in _DEGENERATE_MEMBERS:
+
+                def _all_members():
                     f0 = _degen_frame()
                     vals = (f0.select(col).distinct()
-                            .limit(_DEGENERATE_MEMBERS_CAP + 1)
+                            .limit(_DEGENERATE_MEMBER_CAP + 1)
                             .collect())
-                    _DEGENERATE_MEMBERS[dk] = (
-                        None if len(vals) > _DEGENERATE_MEMBERS_CAP
-                        else ({r[0] for r in vals},
-                              f0.schema[col].dataType))
-                memo = _DEGENERATE_MEMBERS[dk]
+                    if len(vals) > _DEGENERATE_MEMBER_CAP:
+                        return None
+                    return {r[0] for r in vals}, f0.schema[col].dataType
+                memo = plancache.get("degenerate_members", (ck, col),
+                                     member_files, _all_members)
                 if memo is not None:
                     members, dtype = memo
                     coerced = {r: _coerce_for(r, dtype) for r in unseen}
@@ -369,11 +375,6 @@ def _validate_cut_members(spark: SparkSession, sf_dir: str, cube: Cube,
 # physical attach
 # ---------------------------------------------------------------------------
 
-_TABLE_COLS_CACHE: dict = {}
-_TABLE_BYTES_CACHE: dict = {}
-_PARQUET_ROWS_CACHE: dict = {}
-
-
 def _disk_bytes(path: str) -> int:
     if os.path.isfile(path):
         return os.path.getsize(path)
@@ -386,32 +387,16 @@ def _disk_bytes(path: str) -> int:
 
 def _parquet_rows(sf_dir: str, table: str) -> int | None:
     """Row count of a table's parquet layout from footer metadata only
-    (no Spark job).  None when the table isn't served from local
-    parquet (csv/json fallback, bucketed-db routing) or the footer is
-    unreadable.  Memoized by (path, mtime)."""
+    (no Spark job; the layout read of registry._scan_layout).  None
+    when the table isn't served from local parquet (csv/json fallback,
+    bucketed-db routing) or the footer is unreadable."""
     if os.environ.get("MRS_BUCKETED_DB"):
         return None   # layout routing may serve a different copy
     path = os.path.join(sf_dir, f"{table}.parquet")
     if not os.path.exists(path):
         return None
-    key = (os.path.realpath(path), os.stat(path).st_mtime_ns)
-    hit = _PARQUET_ROWS_CACHE.get(key)
-    if hit is None:
-        try:
-            import pyarrow.parquet as pq
-            if os.path.isfile(path):
-                hit = pq.ParquetFile(path).metadata.num_rows
-            else:
-                hit = 0
-                for root, _, files in os.walk(path):
-                    for f in files:
-                        if f.endswith(".parquet"):
-                            hit += pq.ParquetFile(
-                                os.path.join(root, f)).metadata.num_rows
-        except Exception:
-            hit = -1
-        _PARQUET_ROWS_CACHE[key] = hit
-    return None if hit == -1 else hit
+    layout = _scan_layout(path)
+    return None if layout is None else layout[1]
 
 
 def _axis_upper_bound(spark: SparkSession, sf_dir: str, cube: Cube,
@@ -492,33 +477,25 @@ def _chain_broadcastable(spark: SparkSession, sf_dir: str, dim) -> bool:
     session broadcast threshold, hint the broadcast statically and the
     fact-side Exchange never exists.  Self-scaling: at 100 TB the same
     dim's files exceed the threshold and the plan stays sort-merge.
-    File sizes are memoized; clear_named_set_cache() drops them."""
+    File sizes are memoized in the plan-time cache, stamped with each
+    file's mtime."""
     thr = _broadcast_threshold(spark)
     if thr <= 0 or not dim.tables:
         return False
     total = 0
     for table, _, _ in dim.tables:
-        key = (sf_dir, table)
-        if key not in _TABLE_BYTES_CACHE:
-            size = None
-            for ext in ("parquet", "csv", "json", "orc"):
-                p = os.path.join(sf_dir, f"{table}.{ext}")
-                if os.path.exists(p):
-                    size = _disk_bytes(p)
-                    break
-            _TABLE_BYTES_CACHE[key] = size
-        size = _TABLE_BYTES_CACHE[key]
-        if size is None:
+        path = table_file(sf_dir, table)
+        if path is None:
             return False   # non-local layout (e.g. bucketed db): no hint
-        total += size
+        total += plancache.get("table_bytes", path, [path],
+                               lambda: _disk_bytes(path))
     return total < thr
 
 
 def _table_columns(spark: SparkSession, sf_dir: str, table: str) -> list[str]:
-    key = (sf_dir, table)
-    if key not in _TABLE_COLS_CACHE:
-        _TABLE_COLS_CACHE[key] = load_table(spark, sf_dir, table).columns
-    return _TABLE_COLS_CACHE[key]
+    return plancache.get("table_cols", (sf_dir, table),
+                         _files(sf_dir, [table]),
+                         lambda: load_table(spark, sf_dir, table).columns)
 
 
 def _dim_frame(spark: SparkSession, sf_dir: str, dim: Dimension,
@@ -550,43 +527,38 @@ def _dim_frame(spark: SparkSession, sf_dir: str, dim: Dimension,
     return df
 
 
-#: memoized dim-select PLANS (never data): the same (dim, levels,
-#: props, captions) projection is rebuilt by every query touching the
-#: dimension — each build is ~10 py4j round trips plus a JVM analysis
-#: pass (~50-100 ms).  The value re-checks the Dimension object's
-#: identity to guard id() reuse; keyed by applicationId so entries
-#: from stopped sessions never resurface.  clear_named_set_cache()
-#: (the /flush path) drops it.
-_DIM_SELECT_PLANS: dict = {}
-
-
 def _dim_select(spark: SparkSession, sf_dir: str, dim: Dimension,
                 levels: list[Level], props: list | None = None,
                 caption_overrides: dict | None = None) -> DataFrame:
     """Project the denormalized dim frame down to pk + aliased level
     columns, pre-pruned so only needed columns cross the join.
-    Returns a memoized immutable plan object when the same projection
-    was already built this session."""
+    Memoized PLAN (never data): the same projection is rebuilt by
+    every query touching the dimension, and each build is ~10 py4j
+    round trips plus a JVM analysis pass (~50-100 ms)."""
     caption_overrides = caption_overrides or {}
-    key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir),
-           id(dim), tuple(lv.name for lv in levels),
+    key = (os.path.realpath(sf_dir), id(dim),
+           tuple(lv.name for lv in levels),
            tuple(p.alias for p in props or []),
            tuple(sorted((d, l, c) for (d, l), c
                         in caption_overrides.items())))
-    hit = _DIM_SELECT_PLANS.get(key)
-    if hit is not None and hit[0] is dim:
-        return hit[1]
-    exprs = {dim.dim_pk: dim.dim_pk}
-    for lv in levels:
-        exprs[lv.key_alias] = lv.key
-        if lv.caption and lv.caption_alias and lv.caption_alias != lv.key_alias:
-            cap_expr = caption_overrides.get((dim.name, lv.name), lv.caption)
-            exprs[lv.caption_alias] = cap_expr
-    for p in props or []:
-        exprs[p.alias] = p.column
-    frame = _dim_frame(spark, sf_dir, dim, needed_exprs=list(exprs.values()))
-    out = frame.select(*[F.expr(e).alias(a) for a, e in exprs.items()])
-    _DIM_SELECT_PLANS[key] = (dim, out)
+
+    def build():
+        exprs = {dim.dim_pk: dim.dim_pk}
+        for lv in levels:
+            exprs[lv.key_alias] = lv.key
+            if lv.caption and lv.caption_alias \
+                    and lv.caption_alias != lv.key_alias:
+                exprs[lv.caption_alias] = caption_overrides.get(
+                    (dim.name, lv.name), lv.caption)
+        for p in props or []:
+            exprs[p.alias] = p.column
+        frame = _dim_frame(spark, sf_dir, dim,
+                           needed_exprs=list(exprs.values()))
+        return dim, frame.select(*[F.expr(e).alias(a)
+                                   for a, e in exprs.items()])
+    held, out = plancache.get("dim_select", key,
+                              _files(sf_dir, _dim_tables(dim)), build)
+    assert held is dim   # the entry pins dim, so its id() is not reused
     return out
 
 
@@ -594,12 +566,6 @@ def _dim_select(spark: SparkSession, sf_dir: str, dim: Dimension,
 # parent-child hierarchies (reference foodmart.xml:529-547: HR cube
 # employee/supervisor with <ParentExpression> + <Closure>)
 # ---------------------------------------------------------------------------
-
-#: closure frames are iterative-join builds reused by every query on
-#: the dimension; memoized per (session, data dir, dimension) and
-#: persisted — clear_named_set_cache() (the /flush path) drops them.
-_PC_CLOSURES: dict = {}
-
 
 def pc_member_frame(spark: SparkSession, sf_dir: str,
                     dim: Dimension) -> DataFrame:
@@ -631,13 +597,17 @@ def pc_closure_frame(spark: SparkSession, sf_dir: str,
     precomputed closure table when declared (Mondrian ``<Closure>``,
     reference foodmart.xml:537-540); otherwise builds it distributedly
     (operators/closure.py, log2(depth) self-join passes) and persists
-    the result — built once per session+dir, re-read by every query on
-    the dimension."""
+    the result — memoized in the plan-time cache, which unpersists it
+    when the entry leaves, and re-read by every query on the
+    dimension."""
+    return plancache.get("pc_closure", (sf_dir, dim.name),
+                         _files(sf_dir, _dim_tables(dim)),
+                         lambda: _build_pc_closure(spark, sf_dir, dim))
+
+
+def _build_pc_closure(spark: SparkSession, sf_dir: str,
+                      dim: Dimension) -> DataFrame:
     pc = dim.parent_child
-    ck = (spark.sparkContext.applicationId, sf_dir, dim.name)
-    hit = _PC_CLOSURES.get(ck)
-    if hit is not None:
-        return hit
     if pc.closure_table:
         cl = load_table(spark, sf_dir, pc.closure_table).select(
             F.col("ancestor_id").cast("string").alias("ancestor_id"),
@@ -665,14 +635,12 @@ def pc_closure_frame(spark: SparkSession, sf_dir: str,
                     .limit(1).count())
         if deeper:
             cl.unpersist()
-            _PC_CLOSURES.pop(ck, None)
             raise ParseError(
                 f"parent-child dimension {dim.name!r} declares "
                 f"known_depth={pc.known_depth}, but the tree is "
                 "deeper — ancestor chains would be silently "
                 "truncated; raise known_depth or drop it to let the "
                 "builder converge")
-    _PC_CLOSURES[ck] = cl
     return cl
 
 
@@ -685,37 +653,31 @@ def _pc_select(spark: SparkSession, sf_dir: str, dim: Dimension,
     Mondrian's closure-table SQL pays), so groupBy(member key)
     aggregates whole subtrees (a supervisor's cell = their own facts
     plus all transitive reports').  The projected plan is memoized
-    like _dim_select's (the closure frame already was; the member ⋈
-    closure join + projection was rebuilt per query)."""
+    like _dim_select's and keyed on its closure, fetched on every call
+    so the closure stays as recently used as the plan; a rebuilt
+    closure gets a new plan, never one on an unpersisted frame."""
     lv = levels[0]
-    key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir),
-           id(dim), lv.name,
+    cl = pc_closure_frame(spark, sf_dir, dim)
+    key = (os.path.realpath(sf_dir), id(dim), id(cl), lv.name,
            tuple(sorted((d, l, c) for (d, l), c
                         in (caption_overrides or {}).items())))
-    hit = _DIM_SELECT_PLANS.get(key)
-    if hit is not None and hit[0] is dim:
-        return hit[1]
-    members = pc_member_frame(spark, sf_dir, dim)
-    cl = pc_closure_frame(spark, sf_dir, dim)
-    joined = cl.join(members, cl["ancestor_id"] == members["node_id"],
-                     "inner")
-    cols = [F.col("descendant_id").alias("__pc_desc__"),
-            F.expr(lv.key).alias(lv.key_alias)]
-    if lv.caption and lv.caption_alias and lv.caption_alias != lv.key_alias:
-        cap = (caption_overrides or {}).get((dim.name, lv.name), lv.caption)
-        cols.append(F.expr(cap).alias(lv.caption_alias))
-    out = joined.select(*cols)
-    _DIM_SELECT_PLANS[key] = (dim, out)
+
+    def build():
+        members = pc_member_frame(spark, sf_dir, dim)
+        joined = cl.join(members, cl["ancestor_id"] == members["node_id"],
+                         "inner")
+        cols = [F.col("descendant_id").alias("__pc_desc__"),
+                F.expr(lv.key).alias(lv.key_alias)]
+        if lv.caption and lv.caption_alias \
+                and lv.caption_alias != lv.key_alias:
+            cap = (caption_overrides or {}).get((dim.name, lv.name),
+                                                lv.caption)
+            cols.append(F.expr(cap).alias(lv.caption_alias))
+        return dim, cl, joined.select(*cols)
+    held, held_cl, out = plancache.get(
+        "pc_select", key, _files(sf_dir, _dim_tables(dim)), build)
+    assert held is dim and held_cl is cl   # pinned, so ids not reused
     return out
-
-
-def clear_pc_closures() -> None:
-    for cl in _PC_CLOSURES.values():
-        try:
-            cl.unpersist()
-        except Exception:
-            pass
-    _PC_CLOSURES.clear()
 
 
 # ---------------------------------------------------------------------------
@@ -1671,10 +1633,8 @@ def _aggregate_cube(spark: SparkSession, sf_dir: str, cube: Cube,
                        and level.caption_alias
                        and level.caption_alias != level.key_alias)
         match_col = level.caption_alias if use_caption else level.key_alias
-        ck = (spark.sparkContext.applicationId, sf_dir, cube.name,
-              dim.name, level.name, repr(raw), target_name, "ancestor")
-        keys = _LASTPERIODS_KEYS.get(ck)
-        if keys is None:
+
+        def ancestor_keys():
             if dim.is_degenerate:
                 exprs = {target.key_alias: target.key,
                          level.key_alias: level.key}
@@ -1684,13 +1644,16 @@ def _aggregate_cube(spark: SparkSession, sf_dir: str, cube: Cube,
                     *[F.expr(e).alias(a) for a, e in exprs.items()])
             else:
                 keys_src = _dim_select(spark, sf_dir, dim, [target, level])
-            keys = [r[0] for r in
+            return [r[0] for r in
                     (keys_src
                      .filter(F.col(match_col)
                              == F.lit(_coerce(raw.lstrip("&"))))
                      .select(target.key_alias).distinct()
                      .limit(2).collect())]
-            _LASTPERIODS_KEYS[ck] = keys
+        keys = plancache.get(
+            "member_keys", (sf_dir, cube.name, dim.name, level.name,
+                            repr(raw), target_name, "ancestor"),
+            _files(sf_dir, [cube.fact] + _dim_tables(dim)), ancestor_keys)
         if len(keys) != 1:
             raise ParseError(
                 f"ANCESTOR({anc_path!r}): member not found"
@@ -3401,38 +3364,15 @@ def _densify_gs(spark, sf_dir, cube, drills, ddl_axes, gs_markers, agg,
     return dense_all.join(agg_slim, cond, "left").select(*out_cols)
 
 
-#: memoized named-set member keys: a TopCount set is k rows by
-#: definition, so the materialized keys become an IN-literal predicate
-#: (pushed to the fact scan — better than any join) and the ranking
-#: aggregation runs ONCE per (session, data dir, set definition), not
-#: once per query.  /flush clears it (api.py), like the result cache.
-_NAMED_SET_KEYS: dict = {}
-_LASTPERIODS_KEYS: dict = {}
-_LEVEL_REPEATS: dict = {}
-
 #: named-set EVALUATION routers (r13): {(appId, sf_dir, cube name):
 #: RollupManager}.  A fully-routed query with a computed named set
 #: still paid one fact scan — the set's ranking aggregate; with a
 #: registered manager that aggregate routes through a covering rollup
 #: too (sum-of-sums is exact and the key tie-break is deterministic,
 #: so the selected member set is bit-identical).  RollupManager
-#: registers itself here; appends clear _NAMED_SET_KEYS via the
-#: invalidation path, so re-evaluation sees the merged rollup.
+#: registers itself here; appends call plancache.invalidate(), so
+#: re-evaluation sees the merged rollup.
 _NS_ROUTERS: dict = {}
-
-
-def clear_named_set_cache() -> None:
-    from .sources.registry import clear_table_plans
-    _NAMED_SET_KEYS.clear()
-    _LASTPERIODS_KEYS.clear()
-    _LEVEL_REPEATS.clear()
-    _TABLE_BYTES_CACHE.clear()
-    _PARQUET_ROWS_CACHE.clear()
-    _DIM_SELECT_PLANS.clear()
-    _MEMBER_EXISTS.clear()
-    _DEGENERATE_MEMBERS.clear()
-    clear_table_plans()
-    clear_pc_closures()
 
 
 def _degenerate_keys_repeat(spark: SparkSession, sf_dir: str, cube: Cube,
@@ -3449,9 +3389,9 @@ def _degenerate_keys_repeat(spark: SparkSession, sf_dir: str, cube: Cube,
     ancestor keys, key) in one fact-scan aggregate (the full ancestor
     prefix, not just the immediate parent: Month is unique within its
     Quarter-of-any-year yet still repeats across years) — not from
-    naming conventions, and memoized for the app lifetime alongside
-    the member-key windows it guards; clear_named_set_cache() drops
-    both together."""
+    naming conventions, and memoized in the plan-time cache like the
+    member-key windows it guards: stale once the fact file's mtime
+    moves, dropped by plancache.invalidate()."""
     idx = hier.level_index(level.name)
     if idx == 0:          # top level: keys are globally unique by def
         return False
@@ -3461,10 +3401,8 @@ def _degenerate_keys_repeat(spark: SparkSession, sf_dir: str, cube: Cube,
         # below is a full fact scan on a cold cache
         return not level.keys_globally_unique
     ancestors = hier.levels[:idx]
-    ck = (spark.sparkContext.applicationId, sf_dir, cube.name,
-          dim.name, hier.name, level.name)
-    hit = _LEVEL_REPEATS.get(ck)
-    if hit is None:
+
+    def probe():
         anc_cols = [F.expr(a.key).alias(f"__p{i}")
                     for i, a in enumerate(ancestors)]
         row = (load_table(spark, sf_dir, cube.fact)
@@ -3474,22 +3412,31 @@ def _degenerate_keys_repeat(spark: SparkSession, sf_dir: str, cube: Cube,
                                       range(len(ancestors))],
                                     "__k").alias("npk"))
                .collect()[0])
-        hit = row["npk"] > row["nk"]
-        _LEVEL_REPEATS[ck] = hit
-    return hit
+        return row["npk"] > row["nk"]
+    return plancache.get(
+        "level_repeats",
+        (sf_dir, cube.name, dim.name, hier.name, level.name),
+        _files(sf_dir, [cube.fact]), probe)
 
 
 def named_set_keys(spark: SparkSession, sf_dir: str, cube: Cube, ns) -> list:
-    """Collected member keys of a named set, memoized."""
-    key = (spark.sparkContext.applicationId, sf_dir, cube.name, ns.name,
-           ns.dimension, ns.level, ns.top_by, ns.k, ns.ascending,
-           getattr(ns, "kind", "top"), getattr(ns, "arg", None))
-    vals = _NAMED_SET_KEYS.get(key)
-    if vals is None:
-        vals = [r[0] for r in
-                named_set_frame(spark, sf_dir, cube, ns).collect()]
-        _NAMED_SET_KEYS[key] = vals
-    return vals
+    """Collected member keys of a named set.  A TopCount set is k rows
+    by definition, so the keys become an IN-literal predicate (pushed
+    to the fact scan, better than any join) and the ranking aggregate
+    runs once per set definition, not once per query: memoized in the
+    plan-time cache, stale once the fact, its bridges or the set's
+    dimension tables change on disk, dropped by
+    plancache.invalidate()."""
+    key = (sf_dir, cube.name, ns.name, ns.dimension, ns.level, ns.top_by,
+           ns.k, ns.ascending, getattr(ns, "kind", "top"),
+           getattr(ns, "arg", None))
+    dim = _resolve_level(cube, ns.dimension, None, ns.level)[0]
+    files = _files(sf_dir, [cube.fact] + [b.table for b in cube.bridges]
+                   + _dim_tables(dim))
+    return plancache.get(
+        "named_set", key, files,
+        lambda: [r[0] for r in
+                 named_set_frame(spark, sf_dir, cube, ns).collect()])
 
 
 def named_set_frame(spark: SparkSession, sf_dir: str, cube: Cube, ns) -> DataFrame:
@@ -3849,7 +3796,8 @@ def _virtualize_idioms(spark: SparkSession, sf_dir: str, cat: Catalog,
         # ship_date vs order_date): the ancestor result is a target-
         # level cut, which every base cube shares
         frames = []
-        for c in _vc_owners(cubes, vc.name, segs[0]):
+        owners = _vc_owners(cubes, vc.name, segs[0])
+        for c in owners:
             dimc, hierc, levelc = _resolve_level(c, segs[0], hier_name,
                                                  level.name)
             targetc = hierc.levels[tgt_idx]
@@ -3867,17 +3815,16 @@ def _virtualize_idioms(spark: SparkSession, sf_dir: str, cat: Catalog,
                 break
         keys_src = reduce(lambda a, b: a.unionByName(b), frames)
         match_col = "__mc" if use_caption else "__m"
-        ck = (spark.sparkContext.applicationId, sf_dir, vc.name,
-              dim.name, level.name, repr(raw), target_name, "vanc")
-        keys = _LASTPERIODS_KEYS.get(ck)
-        if keys is None:
-            keys = [r[0] for r in
-                    (keys_src
-                     .filter(F.col(match_col)
-                             == F.lit(_coerce(raw.lstrip("&"))))
-                     .select("__t").distinct()
-                     .limit(2).collect())]
-            _LASTPERIODS_KEYS[ck] = keys
+        keys = plancache.get(
+            "member_keys", (sf_dir, vc.name, dim.name, level.name,
+                            repr(raw), target_name, "vanc"),
+            _files(sf_dir, [c.fact for c in owners] + _dim_tables(dim)),
+            lambda: [r[0] for r in
+                     (keys_src
+                      .filter(F.col(match_col)
+                              == F.lit(_coerce(raw.lstrip("&"))))
+                      .select("__t").distinct()
+                      .limit(2).collect())])
         if len(keys) != 1:
             raise ParseError(
                 f"ANCESTOR({anc_path!r}): member not found"
@@ -3942,7 +3889,7 @@ def resolve_lastperiods(spark: SparkSession, sf_dir: str, cube: Cube,
     and the rollup router (r14): the n trailing member keys along the
     level's key order, as a drill at the member's level + a member-SET
     cut string — pure drilldown+cut, so a routed query is
-    bit-identical.  Memoized in _LASTPERIODS_KEYS (the degenerate-dim
+    bit-identical.  Memoized in the plan-time cache (the degenerate-dim
     lookup scans the fact's key column once per window)."""
     if n_periods < 1:
         raise ParseError("LASTPERIODS count must be >= 1")
@@ -3956,16 +3903,15 @@ def resolve_lastperiods(spark: SparkSession, sf_dir: str, cube: Cube,
     keys_src, target = _idiom_member_target(
         spark, sf_dir, cube, dim, hier, level, segs[-1],
         "LASTPERIODS", lp_path)
-    ck = (spark.sparkContext.applicationId, sf_dir, cube.name,
-          dim.name, level.name, repr(target), n_periods)
-    keys = _LASTPERIODS_KEYS.get(ck)
-    if keys is None:
-        keys = [r[0] for r in
-                (keys_src.select(level.key_alias).distinct()
-                 .filter(F.col(level.key_alias) <= F.lit(target))
-                 .orderBy(F.col(level.key_alias).desc())
-                 .limit(n_periods).collect())]
-        _LASTPERIODS_KEYS[ck] = keys
+    keys = plancache.get(
+        "member_keys", (sf_dir, cube.name, dim.name, level.name,
+                        repr(target), n_periods),
+        _files(sf_dir, [cube.fact] + _dim_tables(dim)),
+        lambda: [r[0] for r in
+                 (keys_src.select(level.key_alias).distinct()
+                  .filter(F.col(level.key_alias) <= F.lit(target))
+                  .orderBy(F.col(level.key_alias).desc())
+                  .limit(n_periods).collect())])
     # str() fallback: date-keyed levels collect datetime.date while
     # the parsed member stays a string — same member, two reprs
     if not keys or (keys[0] != target
@@ -3996,10 +3942,8 @@ def resolve_member_lag(spark: SparkSession, sf_dir: str, cube: Cube,
         spark, sf_dir, cube, dim, hier, level, segs[-1],
         ".Lag/.Lead", lg_path)
     n_abs = abs(shift)
-    ck = (spark.sparkContext.applicationId, sf_dir, cube.name,
-          dim.name, level.name, repr(target), shift, "lag")
-    keys = _LASTPERIODS_KEYS.get(ck)
-    if keys is None:
+
+    def walk_keys():
         base_keys = keys_src.select(level.key_alias).distinct()
         if shift >= 0:       # Lag: walk EARLIER members, desc
             walk = (base_keys
@@ -4009,8 +3953,11 @@ def resolve_member_lag(spark: SparkSession, sf_dir: str, cube: Cube,
             walk = (base_keys
                     .filter(F.col(level.key_alias) >= F.lit(target))
                     .orderBy(F.col(level.key_alias).asc()))
-        keys = [r[0] for r in walk.limit(n_abs + 1).collect()]
-        _LASTPERIODS_KEYS[ck] = keys
+        return [r[0] for r in walk.limit(n_abs + 1).collect()]
+    keys = plancache.get(
+        "member_keys", (sf_dir, cube.name, dim.name, level.name,
+                        repr(target), shift, "lag"),
+        _files(sf_dir, [cube.fact] + _dim_tables(dim)), walk_keys)
     if not keys or (keys[0] != target
                     and str(keys[0]) != str(target)):
         raise ParseError(f"{lg_path!r}: member not found")
@@ -4036,8 +3983,7 @@ def resolve_ptd(spark: SparkSession, sf_dir: str, cube: Cube,
     cut_strings) where cut_strings = one member cut per chain level +
     the range cut — the exact drilldown+cut rewrite both paths
     execute, so a routed PTD query is bit-identical to the base one.
-    Member lookups memoize in _LASTPERIODS_KEYS (cleared by /flush and
-    appends)."""
+    Member lookups memoize in the plan-time cache."""
     segs = parse_segments(m_path)
     if len(segs) < 3:
         raise ParseError(
@@ -4070,10 +4016,8 @@ def resolve_ptd(spark: SparkSession, sf_dir: str, cube: Cube,
                    and level.caption_alias
                    and level.caption_alias != level.key_alias)
     match_col = level.caption_alias if use_caption else level.key_alias
-    ck = (spark.sparkContext.applicationId, sf_dir, cube.name,
-          dim.name, level.name, repr(raw), anchor_name, "ptd")
-    cached = _LASTPERIODS_KEYS.get(ck)
-    if cached is None:
+
+    def period_keys():
         if dim.is_degenerate:
             exprs = {lv.key_alias: lv.key for lv in chain}
             exprs[level.key_alias] = level.key
@@ -4103,9 +4047,11 @@ def resolve_ptd(spark: SparkSession, sf_dir: str, cube: Cube,
             cond = cond & (F.col(lv.key_alias) == F.lit(k))
         start = (keys_src.filter(cond)
                  .agg(F.min(level.key_alias)).collect()[0][0])
-        cached = (anc_keys, member_key, start)
-        _LASTPERIODS_KEYS[ck] = cached
-    anc_keys, member_key, start = cached
+        return anc_keys, member_key, start
+    anc_keys, member_key, start = plancache.get(
+        "member_keys", (sf_dir, cube.name, dim.name, level.name,
+                        repr(raw), anchor_name, "ptd"),
+        _files(sf_dir, [cube.fact] + _dim_tables(dim)), period_keys)
     cut_strs = []
     for lv, k in zip(chain, anc_keys):
         cut_strs.append(".".join(f"[{s}]" for s in
@@ -4260,10 +4206,16 @@ def _virtualize_time_nav(spark: SparkSession, sf_dir: str, cat: Catalog,
 
     vc = cat.virtual_cube(qm.cube)
     cubes = [cat.cube(n) for n in vc.cube_names]
-    app = spark.sparkContext.applicationId
 
     def owners_of(dim_name: str) -> list[Cube]:
         return _vc_owners(cubes, vc.name, dim_name)
+
+    def files_of(dim_name: str, dim: Dimension) -> list[str]:
+        """Plan-time cache stamp of a member lookup over the union
+        member source: the owning facts plus the conformed dim's
+        tables (shared physically across the base cubes)."""
+        return _files(sf_dir, [c.fact for c in owners_of(dim_name)]
+                      + _dim_tables(dim))
 
     def conformed(label: str, dim_name: str) -> None:
         if dim_name not in vc.conformed_dimensions:
@@ -4321,16 +4273,15 @@ def _virtualize_time_nav(spark: SparkSession, sf_dir: str, cat: Catalog,
         keys_src = union_src(segs[0], hier_name, [level.name],
                              caption_level=level.name)
         target = member_target(keys_src, level, segs[-1], lp_path)
-        ck = (app, sf_dir, vc.name, dim.name, level.name, repr(target),
-              n_periods)
-        keys = _LASTPERIODS_KEYS.get(ck)
-        if keys is None:
-            keys = [r[0] for r in
-                    (keys_src.select(level.key_alias).distinct()
-                     .filter(F.col(level.key_alias) <= F.lit(target))
-                     .orderBy(F.col(level.key_alias).desc())
-                     .limit(n_periods).collect())]
-            _LASTPERIODS_KEYS[ck] = keys
+        keys = plancache.get(
+            "member_keys", (sf_dir, vc.name, dim.name, level.name,
+                            repr(target), n_periods),
+            files_of(segs[0], dim),
+            lambda: [r[0] for r in
+                     (keys_src.select(level.key_alias).distinct()
+                      .filter(F.col(level.key_alias) <= F.lit(target))
+                      .orderBy(F.col(level.key_alias).desc())
+                      .limit(n_periods).collect())])
         if not keys or (keys[0] != target
                         and str(keys[0]) != str(target)):
             raise ParseError(f"{lp_path!r}: member not found")
@@ -4360,10 +4311,8 @@ def _virtualize_time_nav(spark: SparkSession, sf_dir: str, cat: Catalog,
                              caption_level=level.name)
         target = member_target(keys_src, level, segs[-1], lg_path)
         n_abs = abs(shift)
-        ck = (app, sf_dir, vc.name, dim.name, level.name, repr(target),
-              shift, "lag")
-        keys = _LASTPERIODS_KEYS.get(ck)
-        if keys is None:
+
+        def walk_keys():
             base_keys = keys_src.select(level.key_alias).distinct()
             if shift >= 0:       # Lag: walk EARLIER members, desc
                 walk = (base_keys
@@ -4373,8 +4322,11 @@ def _virtualize_time_nav(spark: SparkSession, sf_dir: str, cat: Catalog,
                 walk = (base_keys
                         .filter(F.col(level.key_alias) >= F.lit(target))
                         .orderBy(F.col(level.key_alias).asc()))
-            keys = [r[0] for r in walk.limit(n_abs + 1).collect()]
-            _LASTPERIODS_KEYS[ck] = keys
+            return [r[0] for r in walk.limit(n_abs + 1).collect()]
+        keys = plancache.get(
+            "member_keys", (sf_dir, vc.name, dim.name, level.name,
+                            repr(target), shift, "lag"),
+            files_of(segs[0], dim), walk_keys)
         if not keys or (keys[0] != target
                         and str(keys[0]) != str(target)):
             raise ParseError(f"{lg_path!r}: member not found")
@@ -4427,10 +4379,8 @@ def _virtualize_time_nav(spark: SparkSession, sf_dir: str, cat: Catalog,
                        and level.caption_alias != level.key_alias)
         match_col = level.caption_alias if use_caption \
             else level.key_alias
-        ck = (app, sf_dir, vc.name, dim.name, level.name, repr(raw),
-              anchor_name, "ptd")
-        cached = _LASTPERIODS_KEYS.get(ck)
-        if cached is None:
+
+        def period_keys():
             rows = (keys_src
                     .filter(F.col(match_col)
                             == F.lit(_coerce(raw.lstrip("&"))))
@@ -4450,9 +4400,11 @@ def _virtualize_time_nav(spark: SparkSession, sf_dir: str, cat: Catalog,
                 cond = cond & (F.col(lv.key_alias) == F.lit(k))
             start = (keys_src.filter(cond)
                      .agg(F.min(level.key_alias)).collect()[0][0])
-            cached = (anc_keys, member_key, start)
-            _LASTPERIODS_KEYS[ck] = cached
-        anc_keys, member_key, start = cached
+            return anc_keys, member_key, start
+        anc_keys, member_key, start = plancache.get(
+            "member_keys", (sf_dir, vc.name, dim.name, level.name,
+                            repr(raw), anchor_name, "ptd"),
+            files_of(segs[0], dim), period_keys)
         drilldown.append(".".join(
             [segs[0]] + ([hier_name] if hier_name else [])
             + [level.name]))

@@ -26,13 +26,14 @@ from dataclasses import dataclass, field
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from .. import plancache
 from ..catalog import Catalog, Cube, Measure
 from ..parser import (DrilldownSpec, ParseError, parse_cut,
                       parse_drilldown, parse_measure_filter)
 from ..planner import (_aggregate_cube, _apply_filter_exprs, _measure_alias,
                        _order_column, _ref_alias, _resolve_cut,
                        _resolve_drill, _resolve_level, _split_measures,
-                       _tmpl_refs, aggregate, clear_named_set_cache)
+                       _tmpl_refs, aggregate)
 from ..query import QueryModel
 
 #: re-aggregation of rollup rows at a coarser grain.  hll_sketch is
@@ -367,11 +368,11 @@ class RollupManager:
                     r.applied_tags.add(batch_tag)
             out[r.name] = delta.count()
             r.rows = r.frame.count()
-        # appended facts can add/extend members, so the memoized
-        # named-set / LASTPERIODS / .Lag member-key windows (computed
-        # from fact scans for degenerate dims) are stale from here on —
-        # drop them like /flush does instead of serving old windows
-        clear_named_set_cache()
+        # appended facts can add/extend members, and named sets and
+        # member validation may read this manager's in-memory rollup
+        # frames, which have no file whose mtime would move — drop the
+        # plan-time memos like /flush does instead of serving old keys
+        plancache.invalidate()
         for hook in self.invalidation_hooks:
             hook()
         return out

@@ -16,50 +16,35 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import plancache
+
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
 
-#: memoized table PLANS (never data): (applicationId, realpath,
-#: mtime_ns) -> DataFrame.  Building a parquet DataFrame costs a JVM
-#: schema-inference footer read plus several py4j round trips
-#: (~100-200 ms); a query touches 2-8 tables and the engine re-loads
-#: them per plan-time lookup, so the constant cost dominated sf0.1
-#: query wall time (r14 optimization round §"plan-build overhead").
-#: The memo returns the SAME immutable plan object — execution still
-#: scans parquet on every action, so no result is ever cached.  The
-#: mtime key drops stale entries when a table file is rewritten; the
-#: applicationId key drops entries from stopped sessions.
-_TABLE_PLANS: dict = {}
 
-
-def clear_table_plans() -> None:
-    _TABLE_PLANS.clear()
-
-
-#: memoized parquet layout facts per (realpath, mtime_ns):
-#: (total_bytes, total_rows, total_row_groups) — footer metadata only,
-#: no Spark job.  None value = not plain local parquet.
-_SCAN_LAYOUTS: dict = {}
-
-
-def _scan_layout(path: str):
-    key = (os.path.realpath(path), os.stat(path).st_mtime_ns)
-    if key not in _SCAN_LAYOUTS:
+def _scan_layout(*paths: str):
+    """Parquet layout facts of files or partitioned directories, summed:
+    (total_bytes, total_rows, total_row_groups) from footer metadata
+    only, no Spark job.  None = not plain local parquet.  Memoized in
+    the plan-time cache as one entry per call (the part files of one
+    source share it), stamped with the paths' mtimes."""
+    def read():
         try:
             import pyarrow.parquet as pq
-            files = ([path] if os.path.isfile(path) else
-                     [os.path.join(r, f) for r, _, fs in os.walk(path)
-                      for f in fs if f.endswith(".parquet")])
+            files = [f for p in paths for f in (
+                [p] if os.path.isfile(p) else
+                [os.path.join(r, n) for r, _, fs in os.walk(p)
+                 for n in fs if n.endswith(".parquet")])]
             b = r_ = g = 0
             for f in files:
                 m = pq.ParquetFile(f).metadata
                 b += os.path.getsize(f)
                 r_ += m.num_rows
                 g += m.num_row_groups
-            _SCAN_LAYOUTS[key] = (b, r_, g)
+            return (b, r_, g)
         except Exception:
-            _SCAN_LAYOUTS[key] = None
-    return _SCAN_LAYOUTS[key]
+            return None
+    return plancache.get("scan_layout", paths, paths, read)
 
 
 #: rebalance only inputs whose shuffle is provably cheap: past this
@@ -117,13 +102,13 @@ def maybe_spread_compute(frame: DataFrame, source: DataFrame) -> DataFrame:
                  for f in source.inputFiles()]
     except Exception:
         return frame
-    if not files or os.environ.get("MRS_BUCKETED_DB"):
+    if not files or os.environ.get("MRS_BUCKETED_DB") \
+            or not all(f.endswith(".parquet") for f in files):
         return frame
-    metas = [_scan_layout(f) for f in files if f.endswith(".parquet")]
-    if len(metas) != len(files) or any(m is None for m in metas):
+    meta = _scan_layout(*sorted(files))
+    if meta is None:
         return frame
-    total_bytes = sum(m[0] for m in metas)
-    total_rows = sum(m[1] for m in metas)
+    total_bytes, total_rows, _ = meta
     par = frame.sparkSession.sparkContext.defaultParallelism
     if total_bytes > _REBALANCE_MAX_BYTES or total_rows < 1000:
         return frame
@@ -148,31 +133,41 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     bucketed_db = os.environ.get("MRS_BUCKETED_DB")
     if bucketed_db and spark.catalog.tableExists(f"{bucketed_db}.{name}"):
         return spark.table(f"{bucketed_db}.{name}")
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if not os.path.exists(path):
-        for ext, reader in (("csv", _read_csv), ("json", _read_json),
-                            ("orc", lambda s, p: s.read.orc(p))):
-            alt = os.path.join(sf_dir, f"{name}.{ext}")
-            if os.path.exists(alt):
-                return reader(spark, alt)
+    path = table_file(sf_dir, name)
+    if path is None:
         raise FileNotFoundError(f"no table file for {name!r} in {sf_dir}")
-    key = (spark.sparkContext.applicationId, os.path.realpath(path),
-           os.stat(path).st_mtime_ns)
-    df = _TABLE_PLANS.get(key)
-    if df is None:
-        nano_cols = _nano_timestamp_cols(path)
-        if not nano_cols:
-            df = _ntz_to_ltz(spark.read.parquet(path))
-        else:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            df = spark.read.parquet(path)
-            # integer division: nano values exceed double precision (2^53)
-            df = df.withColumns(
-                {c: F.expr(f"timestamp_micros({c} div 1000)")
-                 for c in nano_cols})
-            df = _ntz_to_ltz(df)
-        _TABLE_PLANS[key] = df
-    return df
+    ext = path.rsplit(".", 1)[1]
+    if ext != "parquet":
+        return _READERS[ext](spark, path)
+    # memoized PLAN (never data): building a parquet DataFrame costs a
+    # JVM schema-inference footer read plus several py4j round trips
+    # (~100-200 ms), and a query re-loads 2-8 tables per plan-time
+    # lookup.  Execution still scans parquet on every action.
+    return plancache.get("table_plan", path, [path],
+                         lambda: _read_parquet(spark, path))
+
+
+def table_file(sf_dir: str, name: str) -> str | None:
+    """The file a table is read from: parquet (single file or
+    partitioned directory) first, then the csv/json/orc fallbacks;
+    None when the data dir holds none of them."""
+    for ext in ("parquet", "csv", "json", "orc"):
+        path = os.path.join(sf_dir, f"{name}.{ext}")
+        if os.path.exists(path):
+            return path
+    return None
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    nano_cols = _nano_timestamp_cols(path)
+    if not nano_cols:
+        return _ntz_to_ltz(spark.read.parquet(path))
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.parquet(path)
+    # integer division: nano values exceed double precision (2^53)
+    df = df.withColumns(
+        {c: F.expr(f"timestamp_micros({c} div 1000)") for c in nano_cols})
+    return _ntz_to_ltz(df)
 
 
 def _ntz_to_ltz(df: DataFrame) -> DataFrame:
@@ -205,21 +200,8 @@ def _read_json(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.json(path)
 
 
-def load_table_jdbc(spark: SparkSession, url: str, table: str,
-                    partition_column: str | None = None,
-                    num_partitions: int = 8, **options) -> DataFrame:
-    """JDBC scan — the reference's native physical layer
-    (spec_helper.rb:41-47 SQLite / :76-84 Derby).  Needs the driver jar
-    on the Spark classpath; ``partition_column`` (+ bounds in options)
-    turns the read into ``num_partitions`` parallel range scans instead
-    of one connection."""
-    r = spark.read.format("jdbc").option("url", url).option("dbtable", table)
-    if partition_column:
-        r = (r.option("partitionColumn", partition_column)
-              .option("numPartitions", str(num_partitions)))
-    for k, v in options.items():
-        r = r.option(k, str(v))
-    return r.load()
+_READERS = {"csv": _read_csv, "json": _read_json,
+            "orc": lambda s, p: s.read.orc(p)}
 
 
 def _nano_timestamp_cols(path: str) -> list[str]:

@@ -1060,10 +1060,10 @@ def test_named_set_cut_and_drilldown_route(spark, sf_dir):
     pushes to its scans, applied to the rollup rows.  With
     route_named_sets=True the set's own ranking aggregate routes too
     (the last fact scan in an otherwise fully-routed query)."""
-    from mondrian_rest_spark.planner import (clear_named_set_cache,
-                                             named_set_frame)
+    from mondrian_rest_spark import plancache
+    from mondrian_rest_spark.planner import named_set_frame
 
-    clear_named_set_cache()
+    plancache.invalidate()
     mgr = RollupManager(spark, sf_dir, tpch.CATALOG, "Sales",
                         route_named_sets=True)
     mgr.register("cust_year", ("Customer.Customer", "Time.Year"))
@@ -1113,7 +1113,7 @@ def test_named_set_cut_and_drilldown_route(spark, sf_dir):
         # route through this test's manager
         from mondrian_rest_spark.planner import _NS_ROUTERS
         _NS_ROUTERS.clear()
-        clear_named_set_cache()
+        plancache.invalidate()
 
 
 def test_toppercent_topsum_tail_route(spark, sf_dir):

@@ -1870,8 +1870,8 @@ def test_keys_globally_unique_declaration_skips_fact_probe():
 def test_keys_repeat_probe_fallback_for_undeclared(spark, sf_dir):
     """Undeclared levels still use the data-derived probe."""
     import dataclasses
-    from mondrian_rest_spark.planner import (_degenerate_keys_repeat,
-                                             clear_named_set_cache)
+    from mondrian_rest_spark import plancache
+    from mondrian_rest_spark.planner import _degenerate_keys_repeat
     cube = tpch.SALES
     dim = cube.dimension("Time")
     hier = dim.default_hierarchy()
@@ -1880,7 +1880,7 @@ def test_keys_repeat_probe_fallback_for_undeclared(spark, sf_dir):
     hier2 = dataclasses.replace(
         hier, levels=tuple(undeclared if lv.name == "Quarter" else lv
                            for lv in hier.levels))
-    clear_named_set_cache()
+    plancache.invalidate()
     assert _degenerate_keys_repeat(
         spark, sf_dir, cube, dim, hier2, undeclared) is True
 

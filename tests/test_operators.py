@@ -38,60 +38,46 @@ def test_neardup_bruteforce(docs):
     assert (1, 4) not in pairs
 
 
-def test_brute_lanes_spread_stream_side(docs, spark, sf_dir):
+def test_brute_lanes_spread_stream_side(docs, spark, sf_dir, monkeypatch):
     """The brute-force oracles spread the nested-loop join's STREAM
     side on a qualifying (small, under-split) layout — otherwise every
     pairwise evaluation runs on one core (r14 optimization round,
     guide §2.5; measured 425 s -> 28 s for d02 at sf0.1) — and the
     spread changes no values: parquet-backed (spread) and in-memory
     (no inputFiles -> no-op) inputs give identical pair sets."""
+    from mondrian_rest_spark.sources import registry
     from mondrian_rest_spark.sources.registry import load_table
     corpus = load_table(spark, sf_dir, "documents")
-    import os as _os
-
-    from mondrian_rest_spark.sources import registry
-
-    def _qualify(frame):
-        # sf0.001 corpora sit under the 1000-row spread floor: patch
-        # the layout memo to a qualifying record (small, 1 row group,
-        # enough rows) — the same technique as the rebalance-scope test
-        path = frame.inputFiles()[0]
-        path = path[len("file:"):] if path.startswith("file:") else path
-        saved = registry._scan_layout(path)   # populate + fetch
-        key = (_os.path.realpath(path), _os.stat(path).st_mtime_ns)
-        registry._SCAN_LAYOUTS[key] = (saved[0], 1_000_000, 1)
-        return key, saved
-
     emb = load_table(spark, sf_dir, "embeddings")
-    # both _qualify calls inside the try (ADVICE r14): if the second
-    # raises, the first's patched layout entry must still be restored
-    # — a leaked fake record silently enables spreads in every later
-    # test of the session
-    patched: list = []
-    try:
-        kd, sd = _qualify(corpus)
-        patched.append((kd, sd))
-        ke, se = _qualify(emb)
-        patched.append((ke, se))
-        spread = dedup.neardup_bruteforce(corpus, 0.5)
-        assert "RoundRobinPartitioning" in spread._jdf.queryExecution() \
-            .executedPlan().toString()
-        mem = spark.createDataFrame(corpus.collect(), corpus.schema)
-        plain = dedup.neardup_bruteforce(mem, 0.5)
-        assert "RoundRobinPartitioning" not in plain._jdf.queryExecution() \
-            .executedPlan().toString()
-        assert ({(r.a_id, r.b_id, r.jaccard) for r in spread.collect()}
-                == {(r.a_id, r.b_id, r.jaccard) for r in plain.collect()})
-        es = similarity.embedding_neardup(emb, threshold=0.4)
-        assert "RoundRobinPartitioning" in es._jdf.queryExecution() \
-            .executedPlan().toString()
-        emem = spark.createDataFrame(emb.collect(), emb.schema)
-        ep = similarity.embedding_neardup(emem, threshold=0.4)
-        assert ({(r.a_id, r.b_id, r.cosine) for r in es.collect()}
-                == {(r.a_id, r.b_id, r.cosine) for r in ep.collect()})
-    finally:
-        for k, v in patched:
-            registry._SCAN_LAYOUTS[k] = v
+
+    def _path(frame):
+        path = frame.inputFiles()[0]
+        return path[len("file:"):] if path.startswith("file:") else path
+
+    # sf0.001 corpora sit under the 1000-row spread floor: report a
+    # qualifying layout (small, 1 row group, enough rows) for both
+    # corpora — the same technique as the rebalance-scope test
+    qualify = {_path(corpus), _path(emb)}
+    real = registry._scan_layout
+    monkeypatch.setattr(
+        registry, "_scan_layout",
+        lambda p: (real(p)[0], 1_000_000, 1) if p in qualify else real(p))
+    spread = dedup.neardup_bruteforce(corpus, 0.5)
+    assert "RoundRobinPartitioning" in spread._jdf.queryExecution() \
+        .executedPlan().toString()
+    mem = spark.createDataFrame(corpus.collect(), corpus.schema)
+    plain = dedup.neardup_bruteforce(mem, 0.5)
+    assert "RoundRobinPartitioning" not in plain._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert ({(r.a_id, r.b_id, r.jaccard) for r in spread.collect()}
+            == {(r.a_id, r.b_id, r.jaccard) for r in plain.collect()})
+    es = similarity.embedding_neardup(emb, threshold=0.4)
+    assert "RoundRobinPartitioning" in es._jdf.queryExecution() \
+        .executedPlan().toString()
+    emem = spark.createDataFrame(emb.collect(), emb.schema)
+    ep = similarity.embedding_neardup(emem, threshold=0.4)
+    assert ({(r.a_id, r.b_id, r.cosine) for r in es.collect()}
+            == {(r.a_id, r.b_id, r.cosine) for r in ep.collect()})
 
 
 def test_neardup_jaccard_prefix_matches_bruteforce(docs, spark, sf_dir):

@@ -181,16 +181,23 @@ def test_named_set_query_plan_single_fact_scan(spark, sf_dir):
     assert plan.count("lineitem.parquet") == 1, plan
 
 
-def test_flush_clears_named_set_cache(spark, sf_dir):
+def test_flush_clears_named_set_cache(spark, sf_dir, monkeypatch):
+    from mondrian_rest_spark import plancache
     from mondrian_rest_spark import planner as pl
     from mondrian_rest_spark.tpch import CATALOG
     cube = CATALOG.cube("Sales")
     ns = cube.named_set("Top5 Customers")
     keys = pl.named_set_keys(spark, sf_dir, cube, ns)
     assert len(keys) == 5
-    assert pl._NAMED_SET_KEYS          # populated
-    pl.clear_named_set_cache()
-    assert not pl._NAMED_SET_KEYS
+    built: list = []
+    frame = pl.named_set_frame
+    monkeypatch.setattr(pl, "named_set_frame",
+                        lambda *a: built.append(a) or frame(*a))
+    assert pl.named_set_keys(spark, sf_dir, cube, ns) == keys
+    assert not built                   # populated: served from the memo
+    plancache.invalidate()
+    assert pl.named_set_keys(spark, sf_dir, cube, ns) == keys
+    assert len(built) == 1             # cleared: evaluated again
 
 
 def test_virtual_cube_full_outer(spark, sf_dir):
@@ -267,9 +274,8 @@ def test_small_snowflake_chain_is_statically_broadcast(spark, sf_dir):
     fact-side Exchange.  At 100 TB the same files exceed the threshold
     and the hint self-disables."""
     import dataclasses
-    from mondrian_rest_spark.planner import (_chain_broadcastable,
-                                             _TABLE_BYTES_CACHE,
-                                             clear_named_set_cache)
+    from mondrian_rest_spark import plancache
+    from mondrian_rest_spark.planner import _chain_broadcastable
     qm = QueryModel(cube="Sales", measures=["Revenue"],
                     drilldown=["Customer.Customer"],
                     cut=["[Customer].[Region].[&2]"],
@@ -283,7 +289,7 @@ def test_small_snowflake_chain_is_statically_broadcast(spark, sf_dir):
     # disables the hint
     cube = tpch.SALES
     dim = cube.dimension("Customer")
-    clear_named_set_cache()
+    plancache.invalidate()
     assert _chain_broadcastable(spark, sf_dir, dim) is True
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
@@ -417,6 +423,7 @@ def test_degenerate_cut_validation_no_plan_time_fact_scan(
     authority and a rollup covering the level, the fact is never
     loaded during validation at all."""
     import mondrian_rest_spark.planner as P
+    from mondrian_rest_spark import plancache
     from mondrian_rest_spark.plans.rollup import RollupManager
 
     cube = CAT.cube("Sales")
@@ -433,7 +440,7 @@ def test_degenerate_cut_validation_no_plan_time_fact_scan(
 
     key = (spark.sparkContext.applicationId, sf_dir, "Sales")
     P._NS_ROUTERS.pop(key, None)
-    P.clear_named_set_cache()
+    plancache.invalidate()
     monkeypatch.setattr(P, "load_table", counting)
     try:
         # (a) memoized distinct path
@@ -449,7 +456,7 @@ def test_degenerate_cut_validation_no_plan_time_fact_scan(
         mgr = RollupManager(spark, sf_dir, CAT, "Sales")
         mgr.register("yr_auth", ("Time.Year",))
         mgr.register_as_authority()
-        P.clear_named_set_cache()
+        plancache.invalidate()
         calls.clear()
         P._validate_cut_members(spark, sf_dir, cube, rc96)
         with pytest.raises(ParseError, match="not found.*1890"):
@@ -457,7 +464,7 @@ def test_degenerate_cut_validation_no_plan_time_fact_scan(
         assert "lineitem" not in calls
     finally:
         P._NS_ROUTERS.pop(key, None)
-        P.clear_named_set_cache()
+        plancache.invalidate()
 
 
 @pytest.fixture(scope="module")

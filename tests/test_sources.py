@@ -2,6 +2,8 @@
 holds — parquet primary, CSV/JSON accepted (reference reads JDBC
 row stores; SURVEY §2.1 S1)."""
 
+import os
+
 import pytest
 
 from mondrian_rest_spark.sources.registry import load_table
@@ -93,7 +95,7 @@ def test_load_table_memo_invalidates_on_rewrite(spark, tmp_path_factory):
     assert load_table(spark, str(d), "t").count() == 3
 
 
-def test_maybe_rebalance_scopes_by_layout(spark):
+def test_maybe_rebalance_scopes_by_layout(spark, monkeypatch):
     """maybe_rebalance (r14 optimization, guide §2.5) repartitions a
     scan ONLY when the parquet layout has fewer row groups than the
     session has cores AND the input is small — the test layout
@@ -105,29 +107,27 @@ def test_maybe_rebalance_scopes_by_layout(spark):
 
     sf = "/root/testdata/sf0.001"
     docs = load_table(spark, sf, "documents")
-    maybe_rebalance(spark, sf, "documents", docs)   # populate layout memo
-    key = next(k for k in registry._SCAN_LAYOUTS
-               if k[0].endswith("documents.parquet"))
-    saved = registry._SCAN_LAYOUTS[key]
-    try:
-        # a qualifying layout (small, 1 row group, enough rows):
-        # rebalanced to defaultParallelism, rows untouched
-        registry._SCAN_LAYOUTS[key] = (saved[0], 1_000_000, 1)
-        out = maybe_rebalance(spark, sf, "documents", docs)
-        assert out is not docs
-        assert (out.rdd.getNumPartitions()
-                == spark.sparkContext.defaultParallelism)
-        assert sorted(r.doc_id for r in out.collect()) == \
-            sorted(r.doc_id for r in docs.collect())
+    real = registry._scan_layout(os.path.join(sf, "documents.parquet"))
 
-        # a layout whose row-group count already covers the cores: no-op
-        registry._SCAN_LAYOUTS[key] = (saved[0], 1_000_000, 10_000)
-        assert maybe_rebalance(spark, sf, "documents", docs) is docs
-        # production-size input (> 512 MB): no-op
-        registry._SCAN_LAYOUTS[key] = (1 << 40, 1_000_000, 1)
-        assert maybe_rebalance(spark, sf, "documents", docs) is docs
-        # tiny input (the shuffle costs more than it spreads): no-op
-        registry._SCAN_LAYOUTS[key] = saved
-        assert maybe_rebalance(spark, sf, "documents", docs) is docs
-    finally:
-        registry._SCAN_LAYOUTS[key] = saved
+    def layout(record):
+        monkeypatch.setattr(registry, "_scan_layout", lambda path: record)
+
+    # a qualifying layout (small, 1 row group, enough rows):
+    # rebalanced to defaultParallelism, rows untouched
+    layout((real[0], 1_000_000, 1))
+    out = maybe_rebalance(spark, sf, "documents", docs)
+    assert out is not docs
+    assert (out.rdd.getNumPartitions()
+            == spark.sparkContext.defaultParallelism)
+    assert sorted(r.doc_id for r in out.collect()) == \
+        sorted(r.doc_id for r in docs.collect())
+
+    # a layout whose row-group count already covers the cores: no-op
+    layout((real[0], 1_000_000, 10_000))
+    assert maybe_rebalance(spark, sf, "documents", docs) is docs
+    # production-size input (> 512 MB): no-op
+    layout((1 << 40, 1_000_000, 1))
+    assert maybe_rebalance(spark, sf, "documents", docs) is docs
+    # tiny input (the shuffle costs more than it spreads): no-op
+    layout(real)
+    assert maybe_rebalance(spark, sf, "documents", docs) is docs
