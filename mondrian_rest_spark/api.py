@@ -10,6 +10,7 @@ Route map (reference api.rb line refs):
     GET  /cubes/<cube>/members?full_name=         :93-113
     GET|POST /cubes/<cube>/aggregate[.csv|.jsonrecords|.xls]  :115-158
     GET  /flush?secret=                           :52-70
+    GET  /stats                     (no reference analog: cache counters)
 
 Execution is one shared SparkSession (the reference's connection
 singleton, api_helpers.rb:7-16); aggregate results are collected on
@@ -821,8 +822,9 @@ def create_app(cat: Catalog, sf_dir: str, spark=None,
         # close the advisor loop (r10, VERDICT r9 #6): build the top-N
         # recommended rollups through the existing register() path and
         # report estimated vs REALIZED routing hit-rate by replaying
-        # the served-query log through the router's _choose (pure
-        # plan-time decision, no execution).  Secret-gated like /flush
+        # the served-query log through the router's _choose (a
+        # plan-time decision; it reads at most the held members of a
+        # lifted level, never the facts).  Secret-gated like /flush
         # — materialization writes cluster state.
         if flush_secret is None or request.args.get("secret") != flush_secret:
             return jsonify({"error": "forbidden"}), 403
@@ -941,6 +943,20 @@ def create_app(cat: Catalog, sf_dir: str, spark=None,
                 b["est_covered_weight"] for b in built),
             "realized": {"routed": routed, "total": len(log),
                          "hit_rate": (routed / len(log)) if log else None},
+        })
+
+    @app.get("/stats")
+    def stats():
+        # process-level cache and pin state (ROADMAP direction 1):
+        # plan-time cache entries/hits/misses per kind, the result
+        # cache's counters, and the persisted RDDs Spark holds
+        with cache_lock:
+            rc = dict(cache_stats, entries=len(result_cache))
+        return jsonify({
+            "plan_cache": plancache.stats(),
+            "result_cache": rc,
+            "persisted_rdds": get_spark().sparkContext._jsc
+                                         .getPersistentRDDs().size(),
         })
 
     @app.get("/flush")

@@ -13,7 +13,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from .catalog import Catalog, Cube
-from .planner import ResolvedDrill, _resolve_level, members_frame
+from .planner import (ResolvedDrill, _resolve_level, held_rows,
+                      members_frame)
 
 #: member-listing collect ceiling (analog of planner.MAX_DENSE_CELLS):
 #: a metadata endpoint must never OOM the driver enumerating a
@@ -257,6 +258,36 @@ def _all_member_full_name(dim, hier) -> str:
     return f"[{dim.name}].[{hier.all_member_name or 'All ' + dim.name + 's'}]"
 
 
+def _distinct_sorted(mf: DataFrame, keys: list[str], order: list[str],
+                     level_name: str | None = None) -> list:
+    """One row per ``keys`` tuple of a member frame, ordered by
+    ``order`` (ascending, nulls first, like Spark's orderBy).  A held
+    member set (planner.held_members) is deduplicated and sorted on the
+    driver with no Spark job; any other frame runs dropDuplicates +
+    orderBy.  With ``level_name`` the listing is refused past
+    MAX_MEMBER_LIST: member listings collect to the driver (reference
+    behavior), so absurd cardinalities get a clear 400 instead of a
+    driver OOM — same philosophy as planner.MAX_DENSE_CELLS."""
+    rows = held_rows(mf)
+    if rows is not None:
+        rows.sort(key=lambda r: [(r[c] is not None, r[c]) for c in order])
+        firsts: dict = {}
+        for r in rows:
+            firsts.setdefault(tuple(r[c] for c in keys), r)
+        rows = list(firsts.values())
+        n = len(rows)
+    else:
+        dedup = mf.dropDuplicates(keys)
+        n = dedup.count() if level_name is not None else 0
+    if level_name is not None and n > MAX_MEMBER_LIST:
+        from .parser import ParseError
+        raise ParseError(
+            f"level {level_name!r} has {n:,} members "
+            f"(> {MAX_MEMBER_LIST:,}); use cuts/aggregate queries "
+            "instead of enumerating it")
+    return rows if rows is not None else dedup.orderBy(*order).collect()
+
+
 def member_payloads(spark: SparkSession, sf_dir: str, cat: Catalog,
                     cube_name: str, dim_name: str, level_name: str | None = None,
                     hierarchy: str | None = None,
@@ -272,9 +303,10 @@ def member_payloads(spark: SparkSession, sf_dir: str, cat: Catalog,
     property value (api_spec.rb:73-78); ``children`` attaches the next
     level's members under each parent (api_spec.rb:80-85).
 
-    One distinct-select over the denormalized dim frame (+ one for the
-    child level when requested) — driver-side shaping only touches the
-    collected member list, which is small by construction.
+    The level's held member rows (+ the child level's when requested),
+    deduplicated, ordered and shaped on the driver with no Spark job;
+    a level wider than the hold cap runs one distinct-select over the
+    denormalized dim frame instead.
     """
     cube = resolve_cube(cat, cube_name, dim_name)
     dim, hier, level = _resolve_level(cube, dim_name, hierarchy, level_name)
@@ -303,19 +335,8 @@ def member_payloads(spark: SparkSession, sf_dir: str, cat: Catalog,
     if key is not None:
         mf = mf.filter(F.col(level.key_alias).cast("string") == str(key))
     path_keys = [lv.key_alias for lv in rd.group_levels]
-    dedup = mf.dropDuplicates([level.key_alias])
-    if key is None:
-        # member listings collect to the driver (reference behavior);
-        # refuse absurd cardinalities with a clear 400 instead of a
-        # driver OOM — same philosophy as planner.MAX_DENSE_CELLS
-        n = dedup.count()
-        if n > MAX_MEMBER_LIST:
-            from .parser import ParseError
-            raise ParseError(
-                f"level {level.name!r} has {n:,} members "
-                f"(> {MAX_MEMBER_LIST:,}); use cuts/aggregate queries "
-                "instead of enumerating it")
-    rows = dedup.orderBy(*path_keys).collect()
+    rows = _distinct_sorted(mf, [level.key_alias], path_keys,
+                            None if key is not None else level.name)
 
     # child members / counts: one extra distinct-select, grouped on the
     # driver (member lists are small by construction)
@@ -329,9 +350,8 @@ def member_payloads(spark: SparkSession, sf_dir: str, cat: Catalog,
         parent_keys = [r[level.key_alias] for r in rows]
         if key is not None or len(parent_keys) <= 1000:
             cmf = cmf.filter(F.col(level.key_alias).isin(parent_keys))
-        for cr in (cmf.dropDuplicates([level.key_alias, child_level.key_alias])
-                      .orderBy(level.key_alias, child_level.key_alias)
-                      .collect()):
+        pair = [level.key_alias, child_level.key_alias]
+        for cr in _distinct_sorted(cmf, pair, pair):
             child_rows.setdefault(cr[level.key_alias], []).append(cr)
 
     def level_hash(row, li: int, cap_alias: str | None = None,

@@ -1,7 +1,7 @@
 """The plan-time cache: one bounded memo for everything the engine
 derives from table files before a query runs — table plans, parquet
-footer facts, dim-select plans, parent-child closures, member sets and
-named-set / member-window keys.
+footer facts, dim-select plans, parent-child closures, the held member
+rows of level sets and named-set / member-window keys.
 
 One validity rule covers every entry.  An entry is keyed by
 ``(kind, applicationId, key)`` and stamped with the ``(realpath,
@@ -10,7 +10,8 @@ have changed since is a miss.  A rewritten table is therefore never
 answered from its old contents, with or without ``/flush``.
 :func:`invalidate` drops everything: ``GET /flush`` calls it, and so do
 rollup appends, whose in-memory frames feed named-set evaluation but
-have no file to stamp.
+have no file to stamp.  :func:`stats` reports entries, hits and misses
+per kind (``GET /stats``).
 
 The cache is an LRU of at most :data:`MAX_ENTRIES` entries.  A persisted
 DataFrame that leaves it (evicted, replaced by a newer version, or
@@ -36,6 +37,8 @@ MAX_ENTRIES = 1024
 
 #: (kind, applicationId, key) -> (file stamp, value), oldest use first
 _ENTRIES: OrderedDict = OrderedDict()
+#: kind -> [hits, misses] since the process started
+_COUNTS: dict = {}
 _LOCK = threading.Lock()
 
 
@@ -65,9 +68,12 @@ def get(kind: str, key, paths, fn):
     stamp = _stamp(paths)
     with _LOCK:
         hit = _ENTRIES.get(ck)
+        counts = _COUNTS.setdefault(kind, [0, 0])
         if hit is not None and hit[0] == stamp:
+            counts[0] += 1
             _ENTRIES.move_to_end(ck)
             return hit[1]
+        counts[1] += 1
     value = fn()
     with _LOCK:
         old = _ENTRIES.pop(ck, None)
@@ -88,3 +94,18 @@ def invalidate() -> None:
         dropped = [v for _, v in _ENTRIES.values()]
         _ENTRIES.clear()
     _release(dropped)
+
+
+def stats() -> dict:
+    """{kind: {"entries", "hits", "misses", "rows"}}: the entries held
+    now, lookups since the process started, and the rows held by
+    entries whose value reports a ``rows`` count (held member sets)."""
+    with _LOCK:
+        out = {k: {"entries": 0, "hits": h, "misses": m, "rows": 0}
+               for k, (h, m) in _COUNTS.items()}
+        for (kind, _, _), (_, v) in _ENTRIES.items():
+            st = out.setdefault(kind, {"entries": 0, "hits": 0,
+                                       "misses": 0, "rows": 0})
+            st["entries"] += 1
+            st["rows"] += getattr(v, "rows", None) or 0
+    return out

@@ -250,15 +250,6 @@ def _cut_predicate(rc: ResolvedCut, schema=None):
     raise ParseError(f"unsupported cut kind {cut.kind!r}")
 
 
-#: full distinct member sets for DEGENERATE levels with no covering
-#: rollup (r14, VERDICT r13 #2): ONE bounded distinct pass per (level,
-#: column) caches the whole member set, so every later value (hit or
-#: miss) validates driver-side.  Levels wider than the cap store None
-#: and fall back to the per-value IN-filter path (an unbounded collect
-#: would be the real scale bug).
-_DEGENERATE_MEMBER_CAP = 100_000
-
-
 def _dim_tables(dim: Dimension) -> list[str]:
     """The tables a dimension's members are read from (none for a
     degenerate dimension, whose members live on the fact)."""
@@ -282,11 +273,14 @@ def _validate_cut_members(spark: SparkSession, sf_dir: str, cube: Cube,
     execution and maps a nonexistent one to a client error (reference
     api_helpers.rb:42-54 -> api.rb:21-50 ``error!``), where this
     engine previously returned a silently empty (or full-dense) result
-    for a valid-typed absent key.  One bounded plan-time lookup per
-    (level, values not yet verified): the member frame filtered by the
-    IN-literal — dim-sized with the predicate pushed to the scan;
-    degenerate levels consult the fact's key column the same way (the
-    cost Mondrian itself pays resolving members against the star).
+    for a valid-typed absent key.  A set lookup in the level's held
+    member rows (:func:`held_members`, hidden ragged members included);
+    a level wider than _LEVEL_MEMBER_CAP filters its member frame by
+    the IN-literal instead.  Degenerate levels read their members from
+    the fact — or, when a routing authority (opt-in _NS_ROUTERS) holds
+    a rollup whose grain includes the level, from its smallest covering
+    rollup, which enumerates the same members at a fraction of the
+    scan and stays authoritative under appends.
 
     Deliberate NON-validation, each pinned in tests: RANGE endpoints
     stay bounds, not resolved members (``[1995-01-01]:[1995-03-31]``
@@ -301,74 +295,47 @@ def _validate_cut_members(spark: SparkSession, sf_dir: str, cube: Cube,
         use_key = ref.by_key or not (level.caption and level.caption_alias)
         col = level.key_alias if use_key else level.caption_alias
         by_col.setdefault(col, []).append(str(ref.value))
-    # verified {(column alias, raw value string)} of this level, valid
-    # while the tables its members are read from are unchanged
-    ck = (sf_dir, cube.name, dim.name, level.name)
-    member_files = _files(sf_dir, [cube.fact] if dim.is_degenerate
-                          else _dim_tables(dim))
-    seen = plancache.get("member_exists", ck, member_files, set)
+    rd = ResolvedDrill(dim, rc.hierarchy, level, [level])
     for col, raws in by_col.items():
-        unseen = sorted({r for r in raws if (col, r) not in seen})
-        if not unseen:
-            continue
-        if dim.is_degenerate:
-            # a degenerate level's members live on the fact — but
-            # when a routing authority (opt-in _NS_ROUTERS) holds a
-            # rollup whose grain includes the level, its rows
-            # enumerate exactly the same members at a fraction of the
-            # scan (and stay authoritative under appends)
-            mgr = _NS_ROUTERS.get(
-                (spark.sparkContext.applicationId, sf_dir, cube.name))
-            covering = [r for r in getattr(mgr, "rollups", [])
-                        if level.key_alias in r.key_cols
-                        and col in r.frame.columns]
-            if covering:
-                frame = min(covering, key=lambda r: r.rows).frame
-            else:
-                def _degen_frame():
-                    exprs = {level.key_alias: level.key}
-                    if level.caption and level.caption_alias \
-                            and level.caption_alias != level.key_alias:
-                        exprs[level.caption_alias] = level.caption
-                    return load_table(spark, sf_dir, cube.fact).select(
-                        *[F.expr(e).alias(a) for a, e in exprs.items()])
-
-                def _all_members():
-                    f0 = _degen_frame()
-                    vals = (f0.select(col).distinct()
-                            .limit(_DEGENERATE_MEMBER_CAP + 1)
-                            .collect())
-                    if len(vals) > _DEGENERATE_MEMBER_CAP:
-                        return None
-                    return {r[0] for r in vals}, f0.schema[col].dataType
-                memo = plancache.get("degenerate_members", (ck, col),
-                                     member_files, _all_members)
-                if memo is not None:
-                    members, dtype = memo
-                    coerced = {r: _coerce_for(r, dtype) for r in unseen}
-                    missing = [r for r, v in coerced.items()
-                               if v not in members]
-                    if missing:
-                        raise ParseError(
-                            f"cut member not found on {dim.name}."
-                            f"{level.name}: "
-                            + ", ".join(repr(m) for m in missing))
-                    seen.update((col, r) for r in unseen)
-                    continue
-                frame = _degen_frame()   # cap-exceeded fallback
+        held, plan = _validation_source(spark, sf_dir, cube, rd, col)
+        frame = held.frame if held.frame is not None else plan()
+        coerced = {r: _coerce_for(r, frame.schema[col].dataType)
+                   for r in sorted(set(raws))}
+        if held.frame is not None:
+            found = held.values(col)
         else:
-            frame = _dim_select(spark, sf_dir, dim, [level])
-        dtype = frame.schema[col].dataType
-        coerced = {r: _coerce_for(r, dtype) for r in unseen}
-        found = {row[0] for row in
-                 frame.filter(F.col(col).isin(list(coerced.values())))
-                      .select(col).distinct().collect()}
+            found = {row[0] for row in
+                     frame.filter(F.col(col).isin(list(coerced.values())))
+                          .select(col).distinct().collect()}
         missing = [r for r, v in coerced.items() if v not in found]
         if missing:
             raise ParseError(
                 f"cut member not found on {dim.name}.{level.name}: "
                 + ", ".join(repr(m) for m in missing))
-        seen.update((col, r) for r in unseen)
+
+
+def _validation_source(spark: SparkSession, sf_dir: str, cube: Cube,
+                       rd: ResolvedDrill, col: str) -> tuple:
+    """(held member rows, a function building the member frame) a
+    cut on column ``col`` of ``rd``'s level validates against: a
+    degenerate level's smallest covering rollup of the routing
+    authority when there is one (rollup frames have no file to stamp;
+    appends invalidate the cache), else the level's own members."""
+    level, dim = rd.level, rd.dimension
+    if dim.is_degenerate:
+        mgr = _NS_ROUTERS.get(
+            (spark.sparkContext.applicationId, sf_dir, cube.name))
+        covering = [r for r in getattr(mgr, "rollups", [])
+                    if level.key_alias in r.key_cols
+                    and col in r.frame.columns]
+        if covering:
+            rf = min(covering, key=lambda r: r.rows).frame
+            cols = [a for _, a in level.out_cols() if a in rf.columns]
+            return (_hold(spark, ("rollup", id(rf), tuple(cols)), [],
+                          lambda: rf.select(*cols).distinct(), rf),
+                    lambda: rf.select(*cols))
+    return (held_members(spark, sf_dir, cube, rd, visible=False),
+            lambda: _members_plan(spark, sf_dir, cube, rd, visible=False))
 
 
 # ---------------------------------------------------------------------------
@@ -2950,13 +2917,119 @@ def _ragged_pred(hier, lv) -> F.Column:
     return F.lit(True)
 
 
+#: a level set's member rows are held on the driver (plan-time cache
+#: kind ``level_members``) when there are at most this many; a wider
+#: level keeps its distributed member frame — an unbounded collect
+#: would be the real scale bug
+_LEVEL_MEMBER_CAP = 100_000
+
+
+class LevelMembers:
+    """The held member rows of one level set: ``frame`` is a local
+    relation over them (filters and projections of it plan no Spark
+    job) and ``rows`` their count — both None when the set is wider
+    than _LEVEL_MEMBER_CAP.  ``values(col)`` is one column's value set,
+    built once per entry, for cut validation (two racing first calls
+    both build it and store equal sets)."""
+
+    def __init__(self, frame, rows, pins):
+        self.frame, self.rows, self._pins = frame, rows, pins
+        self._values: dict = {}
+
+    def values(self, col: str) -> set:
+        v = self._values.get(col)
+        if v is None:
+            v = {r[0] for r in self.frame.select(col).collect()}
+            self._values[col] = v
+        return v
+
+
+def _hold(spark: SparkSession, key, files, build, pins) -> LevelMembers:
+    """The ``level_members`` cache entry for ``key``: ``build()``'s rows
+    read with one bounded collect and re-exposed as a LocalRelation
+    (built on the JVM side: ``spark.createDataFrame`` of Python rows
+    would run tasks to apply the schema).  ``pins`` keeps the objects
+    whose ids the key holds alive with the entry."""
+    def collect():
+        df = build()
+        jrows = df.limit(_LEVEL_MEMBER_CAP + 1)._jdf.collectAsList()
+        if jrows.size() > _LEVEL_MEMBER_CAP:
+            return LevelMembers(None, None, pins)
+        local = spark._jsparkSession.createDataFrame(jrows,
+                                                     df._jdf.schema())
+        return LevelMembers(DataFrame(local, spark), jrows.size(), pins)
+    return plancache.get("level_members", key, files, collect)
+
+
+def held_members(spark: SparkSession, sf_dir: str, cube: Cube,
+                 rd: ResolvedDrill, props: list | None = None,
+                 caption_overrides: dict | None = None,
+                 visible: bool = True) -> LevelMembers:
+    """The held member rows of a drill's group levels, read once per
+    data version: stamped with the tables the members come from (the
+    dimension's, or the fact and its bridge for a degenerate level),
+    dropped by plancache.invalidate().  ``visible=False`` keeps the
+    members a ragged level hides (cut validation resolves them).
+    Property columns are held in alias order, whatever order they were
+    asked for in."""
+    dim = rd.dimension
+    visible = visible and bool(rd.level.hide_member_if)
+    props = sorted(props or [], key=lambda p: p.alias)
+    if dim.is_degenerate:
+        tables = [cube.fact] + ([cube.bridge(dim.bridge).table]
+                                if dim.bridge else [])
+        owner = (id(cube), id(dim))
+    else:
+        # a table-backed dimension's members depend only on its name,
+        # table chain and levels, so a conformed dimension declared
+        # once per cube shares one entry
+        tables = _dim_tables(dim)
+        owner = (dim.name, dim.tables, dim.dim_pk, dim.parent_child,
+                 tuple((h.name, tuple((lv.name, lv.key, lv.key_alias,
+                                       lv.caption, lv.caption_alias,
+                                       lv.properties, lv.hide_member_if)
+                                      for lv in h.levels))
+                       for h in dim.hierarchies))
+    key = (os.path.realpath(sf_dir), owner,
+           rd.hierarchy.name, rd.level.name,
+           tuple(lv.name for lv in rd.group_levels),
+           tuple(p.alias for p in props),
+           tuple(sorted((d, l, c) for (d, l), c
+                        in (caption_overrides or {}).items())),
+           visible)
+    return _hold(spark, key, _files(sf_dir, tables),
+                 lambda: _members_plan(spark, sf_dir, cube, rd, props,
+                                       caption_overrides, None, visible),
+                 (cube, dim))
+
+
+def _local_rows(df: DataFrame) -> int | None:
+    """Row count of a frame that optimizes to a local relation (a
+    filtered or projected held member set), read from the optimized
+    plan with no Spark job; None for any other frame."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() != "LocalRelation":
+        return None
+    return plan.data().size()
+
+
+def held_rows(df: DataFrame) -> list | None:
+    """The collected rows of a frame that optimizes to a local
+    relation (collecting one runs no Spark job); None otherwise."""
+    return None if _local_rows(df) is None else df.collect()
+
+
 def members_frame(spark: SparkSession, sf_dir: str, cube: Cube, rd: ResolvedDrill,
                   props: list | None = None,
                   caption_overrides: dict | None = None,
-                  restrict: list | None = None) -> DataFrame:
+                  restrict: list | None = None,
+                  visible: bool = True) -> DataFrame:
     """Distinct member tuples of a drill's group levels — the axis member
     set used for dense axes and the members metadata endpoints
     (reference mondrian_ext.rb:125-146; SELECT DISTINCT over dim table).
+    Served from the held member rows (:func:`held_members`) when the
+    set is no wider than _LEVEL_MEMBER_CAP, so repeated requests run no
+    member job; restricted sets keep the distributed frame.
 
     ``restrict``: ResolvedCuts that DEFINE the member set (a
     .Children/.Siblings/OPENINGPERIOD implicit member slice): their
@@ -2964,6 +3037,26 @@ def members_frame(spark: SparkSession, sf_dir: str, cube: Cube, rd: ResolvedDril
     than the drilled levels, then the frame projects back to the
     drilled columns.  Distinct from WHERE cuts, which constrain FACTS
     and leave a dense axis full (null cells)."""
+    if not restrict:
+        held = held_members(spark, sf_dir, cube, rd, props,
+                            caption_overrides, visible)
+        if held.frame is not None:
+            asked = [p.alias for p in props or []
+                     if p.alias in held.frame.columns]
+            if asked == sorted(asked):
+                return held.frame
+            return held.frame.select(
+                *[c for c in held.frame.columns if c not in asked], *asked)
+    return _members_plan(spark, sf_dir, cube, rd, props, caption_overrides,
+                         restrict, visible)
+
+
+def _members_plan(spark: SparkSession, sf_dir: str, cube: Cube,
+                  rd: ResolvedDrill, props: list | None = None,
+                  caption_overrides: dict | None = None,
+                  restrict: list | None = None,
+                  visible: bool = True) -> DataFrame:
+    """The distributed member frame behind members_frame."""
     dim = rd.dimension
     extra = [rc for rc in restrict or []
              if rc.level.name not in {lv.name for lv in rd.group_levels}]
@@ -2973,7 +3066,7 @@ def members_frame(spark: SparkSession, sf_dir: str, cube: Cube, rd: ResolvedDril
     # ragged visibility (r11): only the DRILLED level's rule applies;
     # the parents-name rule needs the parent level's columns in the
     # build (projected back out below)
-    ragged = [rd.level] if rd.level.hide_member_if else []
+    ragged = [rd.level] if rd.level.hide_member_if and visible else []
     ragged_extra = False
     for lv in ragged:
         if lv.hide_member_if == "if_parents_name":
@@ -3119,30 +3212,60 @@ def _vc_members_frame(spark, sf_dir, vc, cubes, cube0, rd,
     if len(owners) <= 1:
         return members_frame(spark, sf_dir, cube0, rd, props,
                              caption_overrides, restrict)
-    frames = []
-    for c in owners:
-        dim_c, hier_c, _ = _resolve_level(c, dim.name,
-                                          rd.hierarchy.name,
-                                          rd.level.name)
-        gl_c = [hier_c.level(lv.name) for lv in rd.group_levels]
-        rd_c = ResolvedDrill(dim_c, hier_c,
-                             hier_c.level(rd.level.name), gl_c)
-        restrict_c = None
-        if restrict:
-            # restrict cuts were resolved on the FIRST cube; re-bind
-            # their levels to this owner so the predicate references
-            # this owner's column aliases/exprs
-            restrict_c = [ResolvedCut(dim_c, hier_c,
-                                      hier_c.level(rc.level.name),
-                                      rc.cut)
-                          for rc in restrict]
-        f = members_frame(spark, sf_dir, c, rd_c, None,
-                          caption_overrides, restrict_c)
-        for old, new in _vc_alias_renames(vc, c, owners[0]).items():
-            if old in f.columns and new not in f.columns:
-                f = f.withColumnRenamed(old, new)
-        frames.append(f)
-    return reduce(lambda a, b: a.unionByName(b), frames).distinct()
+
+    def union():
+        frames = []
+        for c in owners:
+            dim_c, hier_c, _ = _resolve_level(c, dim.name,
+                                              rd.hierarchy.name,
+                                              rd.level.name)
+            gl_c = [hier_c.level(lv.name) for lv in rd.group_levels]
+            rd_c = ResolvedDrill(dim_c, hier_c,
+                                 hier_c.level(rd.level.name), gl_c)
+            restrict_c = None
+            if restrict:
+                # restrict cuts were resolved on the FIRST cube;
+                # re-bind their levels to this owner so the predicate
+                # references this owner's column aliases/exprs
+                restrict_c = [ResolvedCut(dim_c, hier_c,
+                                          hier_c.level(rc.level.name),
+                                          rc.cut)
+                              for rc in restrict]
+            f = _members_plan(spark, sf_dir, c, rd_c, None,
+                              caption_overrides, restrict_c)
+            for old, new in _vc_alias_renames(vc, c, owners[0]).items():
+                if old in f.columns and new not in f.columns:
+                    f = f.withColumnRenamed(old, new)
+            frames.append(f)
+        return reduce(lambda a, b: a.unionByName(b), frames).distinct()
+    if restrict:
+        return union()
+    # the unrestricted union is held like any level set, stamped with
+    # every owner's fact and bridge files
+    key = ("virtual", os.path.realpath(sf_dir), id(vc),
+           tuple(id(c) for c in owners), dim.name, rd.hierarchy.name,
+           rd.level.name, tuple(lv.name for lv in rd.group_levels),
+           tuple(sorted((d, l, c) for (d, l), c
+                        in (caption_overrides or {}).items())))
+    files = _files(sf_dir, [t for c in owners
+                            for t in [c.fact] + [b.table
+                                                 for b in c.bridges]])
+    held = _hold(spark, key, files, union, (vc, owners))
+    return held.frame if held.frame is not None else union()
+
+
+def _exact_counts(frames: list, known: list) -> list:
+    """Row counts of ``frames``, taking the ``known`` ones (not None) as
+    given and counting the rest in ONE guard job, not one .count()
+    action per frame: their single-row count aggregates union into a
+    single collect (the branches scan dim-sized frames in parallel)."""
+    todo = [f for f, c in zip(frames, known) if c is None]
+    if not todo:
+        return list(known)
+    got = iter(r["__c"] for r in reduce(
+        lambda a, b: a.unionAll(b),
+        [f.agg(F.count(F.lit(1)).alias("__c")) for f in todo]).collect())
+    return [c if c is not None else next(got) for c in known]
 
 
 def _densify(spark, sf_dir, cube, drills, pred_cuts, ns_cuts, needed_props,
@@ -3170,33 +3293,25 @@ def _densify(spark, sf_dir, cube, drills, pred_cuts, ns_cuts, needed_props,
     # combinatorial guard (SURVEY §7.5.1): the dense tuple count is
     # the product of axis cardinalities — refuse plans that would
     # materialize more cells than any client could consume, with a
-    # clear 400 instead of an executor OOM.  Axis member frames are
-    # dim-sized, so counting them is cheap relative to the query.
-    # Applies to a single large axis too (an uncut leaf-level drill
-    # with nonempty=false is just as unbounded as a crossjoin).
-    # metadata shortcut (r14 optimization, guide §1): when parquet
-    # footer row counts prove the cell product cannot exceed the cap
-    # (true counts ≤ the sound upper bounds), skip the guard job
-    # entirely — for a degenerate axis that job scans the FACT.  The
-    # refusal path still uses exact counts, so 400 behavior is
-    # unchanged.
-    bounds = [_axis_upper_bound(spark, sf_dir, cube, rd,
-                                vc_cubes=vc_cubes) for rd in drills]
-    cells_bound = 1
-    for b in bounds:
-        cells_bound *= b if b is not None else MAX_DENSE_CELLS + 1
-    cells = cells_bound
-    if cells_bound > MAX_DENSE_CELLS:
-        # one guard job, not one .count() action per axis: union the
-        # single-row count aggregates so all axis cardinalities come
-        # back in a single collect (the branches scan dim-sized frames
-        # in parallel)
-        counts = reduce(lambda a, b: a.unionAll(b),
-                        [mf.agg(F.count(F.lit(1)).alias("__c"))
-                         for mf in axis_frames]).collect()
+    # clear 400 instead of an executor OOM.  Applies to a single large
+    # axis too (an uncut leaf-level drill with nonempty=false is just
+    # as unbounded as a crossjoin).  A held axis knows its exact
+    # count; any other axis is bounded by parquet footer row counts
+    # (guide §1: don't run a job to learn what metadata already
+    # proves — for a degenerate axis that job scans the FACT), and
+    # only when the product of those may exceed the cap do the
+    # unknown axes get counted, so 400 behavior rests on exact counts.
+    counts = [_local_rows(mf) for mf in axis_frames]
+    cells = 1
+    for c, rd in zip(counts, drills):
+        b = c if c is not None else _axis_upper_bound(
+            spark, sf_dir, cube, rd, vc_cubes=vc_cubes)
+        cells *= b if b is not None else MAX_DENSE_CELLS + 1
+    if cells > MAX_DENSE_CELLS:
+        counts = _exact_counts(axis_frames, counts)
         cells = 1
-        for r in counts:
-            cells *= r["__c"]
+        for c in counts:
+            cells *= c
             if cells > MAX_DENSE_CELLS:
                 raise ParseError(
                     f"dense axes would materialize >{MAX_DENSE_CELLS:,} "
@@ -3243,6 +3358,7 @@ def _densify_gs(spark, sf_dir, cube, drills, ddl_axes, gs_markers, agg,
                 gs_idx[di] = xi
     full: dict[int, DataFrame] = {}
     parent_only: dict[int, DataFrame] = {}
+    n_parent: dict[int, int] = {}     # exact parent_only counts, if held
     for di, rd in enumerate(drills):
         mf = _dense_axis_frame(spark, sf_dir, cube, rd, di, pred_cuts,
                                ns_cuts, needed_props, caption_overrides,
@@ -3263,39 +3379,24 @@ def _densify_gs(spark, sf_dir, cube, drills, ddl_axes, gs_markers, agg,
                             and p.alias in mf.columns
                             and p.alias not in parent_cols]
             parent_only[di] = mf.select(*parent_cols).distinct()
+            rows = held_rows(mf.select(*parent_cols))
+            if rows is not None:
+                n_parent[di] = len(set(map(tuple, rows)))
             if subset_rc is not None:
                 mf = mf.filter(_cut_predicate(subset_rc))
         full[di] = mf
-    # cell-count guard.  Metadata shortcut first (r14 optimization,
-    # guide §1, same contract as _densify's): parquet footer row
-    # counts bound every frame — parent_only is a projection of full,
-    # so the full-frame bound covers both — and when the SUM over
-    # grouping sets of bound products stays under the cap, the guard
-    # job (which scans the fact for degenerate axes) is provably
-    # unnecessary.  Refusals still use exact counts.
+    # cell-count guard, same contract as _densify's: held frames give
+    # exact counts, the rest parquet-footer bounds (parent_only is a
+    # projection of full, so the full-frame bound covers both), and
+    # only when the SUM over grouping sets may exceed the cap are the
+    # unknown frames counted — refusals use exact counts.
     masks = list(_iproduct((0, 1), repeat=len(ddl_axes)))
-    bounds = {di: _axis_upper_bound(spark, sf_dir, cube, rd,
-                                    vc_cubes=vc_cubes)
-              for di, rd in enumerate(drills)}
-    total_bound = 0
-    for mask in masks:
-        cells = 1
-        for di in range(len(drills)):
-            b = bounds[di]
-            cells *= b if b is not None else MAX_DENSE_CELLS + 1
-        total_bound += cells
-        if total_bound > MAX_DENSE_CELLS:
-            break
-    total = total_bound
-    if total_bound > MAX_DENSE_CELLS:
-        # ONE collect for every frame, cap on the union
-        frames_for_count = list(full.items()) + \
-            [(-1 - k, f) for k, f in parent_only.items()]
-        counts = reduce(lambda a, b: a.unionAll(b),
-                        [f.agg(F.count(F.lit(1)).alias("__c"))
-                         for _, f in frames_for_count]).collect()
-        n_by_key = {k: r["__c"] for (k, _), r in zip(frames_for_count,
-                                                     counts)}
+    keys = list(full) + [-1 - di for di in parent_only]
+    frames = [full[k] if k >= 0 else parent_only[-1 - k] for k in keys]
+    known = [_local_rows(full[k]) if k >= 0 else n_parent.get(-1 - k)
+             for k in keys]
+
+    def set_total(n_by_key):
         total = 0
         for mask in masks:
             cells = 1
@@ -3305,6 +3406,18 @@ def _densify_gs(spark, sf_dir, cube, drills, ddl_axes, gs_markers, agg,
                 else:
                     cells *= n_by_key[di]
             total += cells
+        return total
+    bounds = {}
+    for k, c in zip(keys, known):
+        if c is None:
+            b = _axis_upper_bound(spark, sf_dir, cube,
+                                  drills[k if k >= 0 else -1 - k],
+                                  vc_cubes=vc_cubes)
+            c = b if b is not None else MAX_DENSE_CELLS + 1
+        bounds[k] = c
+    total = set_total(bounds)
+    if total > MAX_DENSE_CELLS:
+        total = set_total(dict(zip(keys, _exact_counts(frames, known))))
         if total > MAX_DENSE_CELLS:
             raise ParseError(
                 f"dense axes would materialize >{MAX_DENSE_CELLS:,} "

@@ -30,10 +30,10 @@ from .. import plancache
 from ..catalog import Catalog, Cube, Measure
 from ..parser import (DrilldownSpec, ParseError, parse_cut,
                       parse_drilldown, parse_measure_filter)
-from ..planner import (_aggregate_cube, _apply_filter_exprs, _measure_alias,
-                       _order_column, _ref_alias, _resolve_cut,
-                       _resolve_drill, _resolve_level, _split_measures,
-                       _tmpl_refs, aggregate)
+from ..planner import (ResolvedDrill, _aggregate_cube, _apply_filter_exprs,
+                       _measure_alias, _order_column, _ref_alias,
+                       _resolve_cut, _resolve_drill, _resolve_level,
+                       _split_measures, _tmpl_refs, aggregate, held_members)
 from ..query import QueryModel
 
 #: re-aggregation of rollup rows at a coarser grain.  hll_sketch is
@@ -436,7 +436,8 @@ class RollupManager:
                 return df, "virtual:" + ",".join(
                     f"{c}={s}" for c, s in sorted(srcs.items()))
             return df, "base"
-        return self._reaggregate(chosen, qm), chosen.name
+        r, lifts = chosen
+        return self._reaggregate(r, qm, lifts), r.name
 
     def _rewrite_ptd(self, qm: QueryModel) -> QueryModel:
         """Key-order time idioms route since r14 via the SHARED
@@ -597,7 +598,9 @@ class RollupManager:
                 return None
         return [level, hier.levels[idx + 1]]
 
-    def _choose(self, qm: QueryModel) -> Rollup | None:
+    def _choose(self, qm: QueryModel) -> tuple[Rollup, list] | None:
+        """The smallest rollup covering ``qm`` and its lifts (see
+        :meth:`_lifts`), or None to answer from the base fact."""
         if qm.cube != self.cube.name:
             return None  # a manager routes exactly one cube
         if (qm.properties or qm.caption
@@ -676,6 +679,10 @@ class RollupManager:
                        if m.agg == "approx_count_distinct"}
         try:
             need = set()
+            # columns a rollup may lift (see _lifts): the drilled
+            # levels' own and plain cuts' — parents=true ancestors,
+            # .Children, GENERATE and grouping-sets pairs must be held
+            liftable: set = set()
             ns_names = {s.name for s in self.cube.named_sets}
             for d in qm.drilldown:
                 parsed = parse_drilldown(d, ns_names)
@@ -698,6 +705,7 @@ class RollupManager:
                 for lv in rd.group_levels:
                     for _, a in lv.out_cols():
                         need.add(a)
+                liftable.update(a for _, a in rd.level.out_cols())
             for ch in qm.children_of:
                 # <member>.Children (r13): drill the member's CHILD
                 # level + cut at the member's own level — the same
@@ -727,6 +735,8 @@ class RollupManager:
                 # predicate the base path pushes to its scans; in
                 # dense mode the ResolvedCut rides to the dense fill
                 need.add(rc.level.key_alias)
+                if rc.cut.kind != "named_set":
+                    liftable.add(rc.level.key_alias)
             if qm.generate_top is not None:
                 for lv in self._generate_levels(qm):
                     for _, a in lv.out_cols():
@@ -765,15 +775,63 @@ class RollupManager:
             return None
         # among all covering rollups, route to the SMALLEST one (fewest
         # materialized rows): at 100 TB the delta between a per-day and
-        # a per-year rollup is orders of magnitude of scan
-        covering = [r for r in self.rollups
-                    if need <= set(r.key_cols)
-                    and sketch_cols <= set(r.frame.columns)]
+        # a per-year rollup is orders of magnitude of scan.  A rollup
+        # covers a coarser level it does not hold through its lifts.
+        covering = []
+        for r in self.rollups:
+            if sketch_cols <= set(r.frame.columns) \
+                    and need - liftable <= set(r.key_cols):
+                lifts = self._lifts(need - set(r.key_cols), r)
+                if lifts is not None:
+                    covering.append((r, lifts))
         if not covering:
             return None
-        return min(covering, key=lambda r: (r.rows, len(r.key_cols)))
+        return min(covering,
+                   key=lambda c: (c[0].rows, len(c[0].key_cols)))
 
-    def _reaggregate(self, r: Rollup, qm: QueryModel) -> DataFrame:
+    def _lifts(self, missing: set, r: Rollup) -> list | None:
+        """How ``r`` serves the ``missing`` columns, or None when it
+        cannot: each must be a key/caption column of a coarser level of
+        a table-backed hierarchy whose deeper level's key ``r`` holds.
+        A lift is (deeper key alias, held member rows of the coarser
+        levels keyed by it): the rollup rows join it before cuts and
+        grouping.  The join is inner and exact — the rollup was built
+        through the same FK chain — provided the deeper key determines
+        the coarser levels, which the held rows are checked for."""
+        by_deep: dict = {}
+        for col in missing:
+            found = next(
+                ((dim, hier, deep, lv)
+                 for dim in self.cube.dimensions
+                 if dim.tables           # not degenerate / parent-child
+                 for hier in dim.hierarchies
+                 for i, lv in enumerate(hier.levels)
+                 if col in {a for _, a in lv.out_cols()}
+                 for deep in hier.levels[i + 1:]
+                 if deep.key_alias in r.key_cols), None)
+            if found is None:
+                return None
+            dim, hier, deep, lv = found
+            by_deep.setdefault((id(dim), hier.name, deep.name),
+                               (dim, hier, deep, set()))[3].add(lv.name)
+        lifts = []
+        for dim, hier, deep, names in by_deep.values():
+            coarse = [lv for lv in hier.levels if lv.name in names]
+            held = held_members(
+                self.spark, self.sf_dir, self.cube,
+                ResolvedDrill(dim, hier, deep, coarse + [deep]),
+                visible=False)
+            if held.frame is None or \
+                    len(held.values(deep.key_alias)) != held.rows:
+                return None
+            cols = [a for lv in coarse for _, a in lv.out_cols()
+                    if a not in r.frame.columns]
+            lifts.append((deep.key_alias,
+                          held.frame.select(deep.key_alias, *cols)))
+        return lifts
+
+    def _reaggregate(self, r: Rollup, qm: QueryModel,
+                     lifts: list = ()) -> DataFrame:
         """Answer the query from the rollup with full post-aggregation
         parity: HAVING / sparse / distinct / ORDER (+ key tie-breaks) /
         OFFSET / LIMIT behave exactly as the planner's base path, so a
@@ -783,12 +841,15 @@ class RollupManager:
         the same declared tolerance of the exact count but not
         bit-identical to the base path's single-pass HLL++ estimate
         (both are approximations by contract; exact distinct never
-        routes)."""
+        routes).  ``lifts`` (from :meth:`_choose`) join the rollup rows
+        to held coarser-level members before anything else."""
         requested = list(qm.measures) or [self.cube.default_measure.name]
         base_measures, _, final_aliases = _split_measures(
             self.cube, self._measure_names(qm))
         display = final_aliases[:len(requested)]
         df = r.frame
+        for deep_key, held in lifts:
+            df = df.join(held, deep_key, "inner")
         pred_cuts, ns_rcs, axis_cuts = [], [], []
         ns_names = {s.name for s in self.cube.named_sets}
         from ..parser import Cut
